@@ -174,6 +174,24 @@ def _iter_coalesce(hint) -> int | None:
     return ITER_STATE_PARTITIONS if getattr(hint, "is_broadcast", False) else None
 
 
+def _iter_fold_width(spark, broadcast: bool) -> int | None:
+    """iterate(coalesce_to=) value for node2vec's walk loops, whose
+    per-round work is Σ_walks deg(cur) (array folds or a Python kernel):
+    in the broadcast regime keep core-count width, never below
+    ITER_STATE_PARTITIONS — narrowing to that tiny-state constant
+    throttles the fold to 4 tasks (measured r16: the 4-wide form ran
+    ~1.7× slower than 32-wide at sf0.1/local[32]).  An explicit width
+    also stops the per-round 3-branch union from growing the state 3x
+    per round (64 -> 192 -> 576 tasks by round 3 at sf0.1, measured
+    r16).  defaultParallelism keeps it scale-adaptive; shuffle-regime
+    state keeps its natural width (None)."""
+    from kafka_merge_purge_spark.operators.iterate import ITER_STATE_PARTITIONS
+
+    if not broadcast:
+        return None
+    return max(ITER_STATE_PARTITIONS, spark.sparkContext.defaultParallelism)
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "id_a",
@@ -1810,7 +1828,7 @@ def node2vec_walks(
 
     if impl == "pandas":
         return _node2vec_pandas(
-            e, nodes, node_type, coin, iterate,
+            e, node_type, coin, iterate,
             walk_length, walks_per_node, seed,
             w_return, w_near, w_far, broadcast_state, n_adj_entries,
         )
@@ -1834,15 +1852,11 @@ def node2vec_walks(
         raise ValueError(
             f"state-exchange mode must be True, False or 'auto', got {broadcast_state!r}"
         )
-    # flagged wrapper, not a bare F.broadcast: _iter_coalesce reads
-    # .is_broadcast to engage the broadcast-regime state narrowing —
-    # a raw function silently reported the shuffle regime, so node2vec's
-    # per-round 3-branch union GREW the state partition count 3x per
-    # round (64 -> 192 -> 576 tasks by round 3 at sf0.1, measured r16)
+    # join hint for the per-round neighbor lookups only; the loop's state
+    # width comes from _iter_fold_width, not from _iter_coalesce
     def hint(df):
         return F.broadcast(df) if broadcast_state else df
 
-    hint.is_broadcast = bool(broadcast_state)
     starts = nodes.select(
         F.explode(
             F.transform(
@@ -1937,21 +1951,8 @@ def node2vec_walks(
         )
         return state.filter(F.col("_done")).unionByName(stepped).unionByName(retired)
 
-    from kafka_merge_purge_spark.operators.iterate import ITER_STATE_PARTITIONS
-
-    # same width policy as the pandas engine (r16): per-row array folds
-    # scale with Σ deg(cur), so keep core-count parallelism in the
-    # broadcast regime instead of the 4-partition tiny-state constant
-    fold_width = (
-        max(
-            ITER_STATE_PARTITIONS,
-            e.sparkSession.sparkContext.defaultParallelism,
-        )
-        if broadcast_state
-        else None
-    )
     out = iterate(starts, step_fn, max_rounds=walk_length,
-                  coalesce_to=fold_width)
+                  coalesce_to=_iter_fold_width(e.sparkSession, broadcast_state))
     adj.unpersist()
     return out.select("walk_id", "start", "path")
 
@@ -2068,7 +2069,7 @@ def _dense_node_index(nodes: DataFrame) -> DataFrame:
 
 
 def _node2vec_pandas(
-    e, nodes, node_type, coin, iterate,
+    e, node_type, coin, iterate,
     walk_length, walks_per_node, seed, w_return, w_near, w_far,
     broadcast_state, n_adj_entries=None,
 ):
@@ -2119,15 +2120,11 @@ def _node2vec_pandas(
         raise ValueError(
             f"state-exchange mode must be True, False or 'auto', got {broadcast_state!r}"
         )
-    # flagged wrapper, not a bare F.broadcast: _iter_coalesce reads
-    # .is_broadcast to engage the broadcast-regime state narrowing —
-    # a raw function silently reported the shuffle regime, so node2vec's
-    # per-round 3-branch union GREW the state partition count 3x per
-    # round (64 -> 192 -> 576 tasks by round 3 at sf0.1, measured r16)
+    # join hint for the per-round neighbor lookups only; the loop's state
+    # width comes from _iter_fold_width, not from _iter_coalesce
     def hint(df):
         return F.broadcast(df) if broadcast_state else df
 
-    hint.is_broadcast = bool(broadcast_state)
     # starts straight off the cached index — idx has EXACTLY one row per
     # node, so the former nodes⋈idx equi-join was an identity join that
     # re-evaluated the caller's upstream for its nodes side (r16)
@@ -2236,10 +2233,10 @@ def _node2vec_pandas(
                         # sorts nothing.  The r15-measured per-row isin
                         # loop (~µs of call overhead + a small sort per
                         # row) survives only as the overflow fallback.
-                        rowrep = np.repeat(
-                            np.arange(live.size, dtype=np.int64), ll
-                        )
                         if plens.sum():
+                            rowrep = np.repeat(
+                                np.arange(live.size, dtype=np.int64), ll
+                            )
                             pflat = np.concatenate(pn_list)
                             M = int(
                                 max(
@@ -2321,25 +2318,8 @@ def _node2vec_pandas(
             .unionByName(retired)
         )
 
-    # broadcast-regime state width = core count, NOT the 4-partition
-    # ITER_STATE_PARTITIONS constant: this loop carries a Python kernel
-    # whose per-round compute is Σ_walks deg(cur) — narrowing the state
-    # to 4 tasks throttles the kernel to 4 cores (measured r16: the
-    # 4-wide form ran ~1.7× slower than 32-wide at sf0.1/local[32]).
-    # defaultParallelism keeps it scale-adaptive (the 8-cpu bench run
-    # gets 8); the shuffle regime keeps its natural width (None).
-    from kafka_merge_purge_spark.operators.iterate import ITER_STATE_PARTITIONS
-
-    kernel_width = (
-        max(
-            ITER_STATE_PARTITIONS,
-            e.sparkSession.sparkContext.defaultParallelism,
-        )
-        if broadcast_state
-        else None
-    )
     out = iterate(starts, step_fn, max_rounds=walk_length,
-                  coalesce_to=kernel_width)
+                  coalesce_to=_iter_fold_width(e.sparkSession, broadcast_state))
     adj.unpersist()
     idx.unpersist()
     return out.select("walk_id", "start", "path")

@@ -15,9 +15,10 @@ Reference semantics (all citations into /root/reference/src/..):
   stdin path kept driver-side (cli.py)
 - counters: merged/purged/skipped/printed totals (Ask.kt:38-40,75-80)
 
-Every transform is narrow (select/filter/union) — no shuffle, no UDF, so
-at 100 TB these are pure map stages that pipeline into the scan and the
-sink with whole-stage codegen.  The only shuffles in this module are the
+Every transform is narrow: a filter, then one leg generator (``_legs``)
+that reads each row once — no union, no shuffle, no UDF, so at 100 TB
+these are pure map stages that pipeline between the scan and the sink
+in a single stage.  The only shuffles in this module are the
 ones the semantics *require*: compaction (per-key argmax) and counters
 (global aggregate), both with map-side partial aggregation.
 """
@@ -50,31 +51,55 @@ def filter_tombstones(records: DataFrame, merge_tombstones: bool = False) -> Dat
     return records.filter(~is_tombstone())
 
 
-def _value_null(records: DataFrame) -> Column:
-    """A NULL literal typed as the frame's actual ``value`` dtype, so the
-    purge leg unions cleanly with a binary, string, or struct payload and
-    the SURVEY §1.4 "value stays its wire type" invariant holds without
-    relying on union type-coercion."""
-    return F.lit(None).cast(records.schema["value"].dataType)
+def _legs(
+    records: DataFrame,
+    dest_topic: str | None,
+    merge_if: Column | None,
+    purge_if: Column | None,
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """The one leg generator behind every routing verb.  Each input row is
+    read once and yields the merge leg where ``merge_if`` holds and the
+    purge leg where ``purge_if`` holds (``None`` omits a leg), as the
+    reference produces both records from one read (MergeAll.kt:47-48,
+    Ask.kt:56-66).
 
+    Leg columns, in output order: ``topic, partition`` (merge: ``dest_topic``
+    and NULL for the sink's partitioner, MergeAll.kt:47; purge: the source's
+    own, Pipeline.kt:91-98); ``src_topic, src_partition, src_offset``, the
+    provenance the sink commits offsets for (Pipeline.kt:43-52); ``key``;
+    ``value`` (purge: a NULL typed as the frame's ``value`` dtype, so the
+    payload keeps its wire type); ``headers`` when present (opaque
+    passthrough, MixedValue.kt:41-43); the ``carry`` columns; ``leg``.
 
-def _headers_cols(records: DataFrame) -> list[Column]:
-    """Opaque headers passthrough (MixedValue.kt:41-43): carried untouched
-    when the frame has them, absent otherwise (batch snapshots)."""
-    return [F.col("headers")] if "headers" in records.columns else []
+    Narrow: an array of at most two leg structs per row and one ``inline``
+    over its non-null entries — no union, no second scan, no shuffle.
+    """
+    tail = [F.col(c) for c in ("headers", *carry) if c in records.columns]
 
+    def leg(cond: Column, tag: str, topic: Column, partition: Column, value: Column) -> Column:
+        return F.when(
+            cond,
+            F.struct(
+                topic.alias("topic"),
+                partition.alias("partition"),
+                F.col("topic").alias("src_topic"),
+                F.col("partition").alias("src_partition"),
+                F.col("offset").alias("src_offset"),
+                F.col("key"),
+                value.alias("value"),
+                *tail,
+                F.lit(tag).alias("leg"),
+            ),
+        )
 
-def _src_cols() -> list[Column]:
-    """Consumed-record provenance carried on every routed leg: the sink's
-    transaction commits offsets for the SOURCE topic/partition it consumed
-    (Pipeline.kt:43-52 keys the offsets map by ``record.topic()/
-    partition()``), so a merge leg re-topiced to the destination must not
-    lose where its row came from."""
-    return [
-        F.col("topic").alias("src_topic"),
-        F.col("partition").alias("src_partition"),
-        F.col("offset").alias("src_offset"),
-    ]
+    legs = []
+    if merge_if is not None:
+        legs.append(leg(merge_if, MERGE_LEG, F.lit(dest_topic), F.lit(None).cast("int"), F.col("value")))
+    if purge_if is not None:
+        value_t = records.schema["value"].dataType
+        legs.append(leg(purge_if, PURGE_LEG, F.col("topic"), F.col("partition"), F.lit(None).cast(value_t)))
+    return records.select(F.inline(F.array_compact(F.array(*legs))))
 
 
 def purge(records: DataFrame) -> DataFrame:
@@ -85,14 +110,7 @@ def purge(records: DataFrame) -> DataFrame:
     (Pipeline.kt:93-95) — the filter keeps that invariant here rather than
     in the caller so composition can't violate it.
     """
-    return records.filter(~is_tombstone()).select(
-        F.col("topic"),
-        F.col("partition"),
-        *_src_cols(),
-        F.col("key"),
-        _value_null(records).alias("value"),
-        *_headers_cols(records),
-    )
+    return _legs(filter_tombstones(records), None, None, F.lit(True)).drop("leg")
 
 
 def merge(records: DataFrame, dest_topic: str, merge_tombstones: bool = False) -> DataFrame:
@@ -102,35 +120,24 @@ def merge(records: DataFrame, dest_topic: str, merge_tombstones: bool = False) -
     ``merge_tombstones`` (reference ``-T``, MergeAll.kt:15-19) forwards
     tombstones to the destination as delete markers instead of dropping
     them."""
-    src = records if merge_tombstones else records.filter(~is_tombstone())
-    return src.select(
-        F.lit(dest_topic).alias("topic"),
-        F.lit(None).cast("int").alias("partition"),
-        *_src_cols(),
-        F.col("key"),
-        F.col("value"),
-        *_headers_cols(records),
-    )
+    return _legs(filter_tombstones(records, merge_tombstones), dest_topic, F.lit(True), None).drop("leg")
 
 
 def merge_all(records: DataFrame, dest_topic: str, merge_tombstones: bool = False) -> DataFrame:
     """The flagship verb (MergeAll.kt:31-61): one scan, two routed output
-    legs — merge to dest + purge back to source — as a single unioned
-    frame tagged with ``leg`` so a partitioned sink can split it without
-    rescanning.
+    legs — merge to dest + purge back to source — in one frame tagged with
+    ``leg`` so a partitioned sink can split it without rescanning.
 
     ``merge_tombstones`` (reference ``-T``, MergeAll.kt:15-19): tombstones
     are forwarded on the merge leg as delete markers; the purge leg still
     never re-tombstones them.
 
-    Scale note: ``unionByName`` of two narrow projections over the same
-    scan lets Spark reuse the exchange-free map stage; the sink (or a
-    ``partitionBy("leg")`` write) splits the legs.
+    Scale note: both legs come out of one read of each source row (see
+    ``_legs``), so a micro-batch scans its input once and runs as one map
+    stage; the sink (or a ``partitionBy("leg")`` write) splits the legs.
     """
-    merge_src = records if merge_tombstones else records.filter(~is_tombstone())
-    merge_leg = merge(merge_src, dest_topic, merge_tombstones).withColumn("leg", F.lit(MERGE_LEG))
-    purge_leg = purge(records).withColumn("leg", F.lit(PURGE_LEG))
-    return merge_leg.unionByName(purge_leg)
+    src = filter_tombstones(records, merge_tombstones)
+    return _legs(src, dest_topic, F.lit(True), ~is_tombstone())
 
 
 def purge_all(records: DataFrame) -> DataFrame:
@@ -165,36 +172,20 @@ def ask(
     - PURGE → purge leg only (Ask.kt:62-66)
     - SKIP  → no output (Ask.kt:67-70)
 
-    Returns a unioned frame with ``action`` and ``leg`` columns.  The
+    Returns one frame with ``action`` and ``leg`` columns.  The
     blocking-stdin interactive mode lives in cli.py (driver-side), because
     a per-record stdin round-trip is antithetical to distributed execution
     — the rule expression is the scalable form.
     """
-    live = filter_tombstones(records, merge_tombstones)
-    decided = live.withColumn("action", action_rule)
-    merge_leg = decided.filter(F.col("action") == Action.MERGE.value).select(
-        F.lit(dest_topic).alias("topic"),
-        F.lit(None).cast("int").alias("partition"),
-        *_src_cols(),
-        F.col("key"),
-        F.col("value"),
-        *_headers_cols(decided),
-        F.col("action"),
-        F.lit(MERGE_LEG).alias("leg"),
+    decided = ask_decisions(records, action_rule, merge_tombstones)
+    action = F.col("action")
+    return _legs(
+        decided,
+        dest_topic,
+        merge_if=action == Action.MERGE.value,
+        purge_if=action.isin(Action.MERGE.value, Action.PURGE.value) & ~is_tombstone(),
+        carry=("action",),
     )
-    purge_leg = decided.filter(
-        F.col("action").isin(Action.MERGE.value, Action.PURGE.value) & ~is_tombstone()
-    ).select(
-        F.col("topic"),
-        F.col("partition"),
-        *_src_cols(),
-        F.col("key"),
-        _value_null(decided).alias("value"),
-        *_headers_cols(decided),
-        F.col("action"),
-        F.lit(PURGE_LEG).alias("leg"),
-    )
-    return merge_leg.unionByName(purge_leg, allowMissingColumns=False)
 
 
 def ask_decisions(records: DataFrame, action_rule: Column, merge_tombstones: bool = False) -> DataFrame:

@@ -48,9 +48,22 @@ def test_snowflake_join_at_scale_broadcasts_only_fixed_dims(spark):
 
 
 def test_merge_all_is_shuffle_free(spark):
-    # one scan, two projected legs, union — any Exchange is a regression
-    plan = formatted_plan(entry.q_merge_all(spark, SF_DIR))
-    assert "Exchange" not in plan
+    # one scan feeding one leg generator (merge + purge legs per row) —
+    # any Exchange, or a second scan of the source, is a regression
+    from pyspark.sql import functions as F
+
+    from kafka_merge_purge_spark.model import load_records
+    from kafka_merge_purge_spark.operators import routing
+
+    rule = (
+        F.when(F.col("offset") % 3 == 0, F.lit("MERGE"))
+        .when(F.col("offset") % 3 == 1, F.lit("PURGE"))
+        .otherwise(F.lit("SKIP"))
+    )
+    asked = routing.ask(load_records(spark, SF_DIR), "events-merged", rule)
+    for df in (entry.q_merge_all(spark, SF_DIR), asked):
+        assert "Exchange" not in formatted_plan(df)
+        assert node_count(df, "Scan parquet") == 1
 
 
 def test_agg_revenue_has_partial_aggregation(spark):

@@ -106,7 +106,7 @@ def test_print_format_rendering(tiny):
 
 
 def test_routing_plan_has_no_shuffle(tiny):
-    # merge_all must stay a pure map-side plan: scan → filter/project → union
+    # merge_all must stay a pure map-side plan: scan → filter → leg generator
     from kafka_merge_purge_spark.plans.introspect import shuffle_count
 
     assert shuffle_count(routing.merge_all(tiny, "dst")) == 0
@@ -169,6 +169,23 @@ def test_ask_with_merge_tombstones_keeps_tombstones(tiny):
     assert merge_leg.filter(F.col("value").isNull()).count() == 1
     # purge leg: never double-tombstone, even under -T
     assert out.filter(out.leg == "purge").count() == 4
+
+
+@pytest.mark.parametrize("merge_tombstones", [False, True])
+def test_ask_routes_as_merge_all_and_purge(tiny, merge_tombstones):
+    # one leg generator behind every verb: an all-MERGE ask is merge_all
+    # (merge also purges, Ask.kt:56-61), an all-PURGE ask is purge
+    # (Ask.kt:62-66) — as multisets, with and without -T
+    def rows(df):
+        return sorted(map(tuple, df.collect()), key=repr)
+
+    merged = routing.ask(tiny, "dst", F.lit("MERGE"), merge_tombstones).drop("action")
+    want = routing.merge_all(tiny, "dst", merge_tombstones)
+    assert merged.columns == want.columns
+    assert rows(merged) == rows(want)
+    purged = routing.ask(tiny, "dst", F.lit("PURGE"), merge_tombstones).drop("action", "leg")
+    assert purged.columns == routing.purge(tiny).columns
+    assert rows(purged) == rows(routing.purge(tiny))
 
 
 def test_headers_pass_through_every_routing_verb(spark):

@@ -16,6 +16,10 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+#: a loop slot whose round 0 never ran (max_rounds == 0) — distinct from
+#: any value a step can return, None included
+_NOT_RUN = object()
+
 
 def main() -> None:
     out_dir = Path(__file__).resolve().parent.parent / "plans" / sys.argv[1]
@@ -43,11 +47,11 @@ def main() -> None:
             # contract, r16).  The captured frame's plan stays readable
             # after the loop finishes (plans are lazy).
             slot = len(rounds)
-            rounds.append(None)
+            rounds.append(_NOT_RUN)
 
             def wrapped(s, i):
                 out = step(s, i)
-                if i == 0 and rounds[slot] is None:
+                if i == 0 and rounds[slot] is _NOT_RUN:
                     rounds[slot] = out
                 return out
 
@@ -60,7 +64,7 @@ def main() -> None:
             I.iterate = real_iterate
         parts = [f"== {name}: final plan ==", formatted_plan(df).strip()]
         for j, rdf in enumerate(rounds):
-            if rdf is None:  # max_rounds == 0 loop: no round ever ran
+            if rdf is _NOT_RUN:  # max_rounds == 0 loop: no round ever ran
                 continue
             parts += [
                 f"\n== {name}: iterate() round-0 step plan (loop #{j}) ==",

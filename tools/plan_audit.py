@@ -13,7 +13,7 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 HEADLINERS = {
-    "q_merge_all": "routing flagship — must stay shuffle-free (scan → two projected legs → union)",
+    "q_merge_all": "routing flagship — must stay shuffle-free (one scan → one leg generator emitting both legs)",
     "q_agg_revenue": "TPC-H Q1 shape — partial+final HashAggregate, exactly one exchange",
     "q_join_orders_customer": "dimension chain — every dim a BroadcastHashJoin, no SortMergeJoin",
     "x_regional_volume": "6-table snowflake — fixed dims (nation, region) force-broadcast; customer/supplier left to AQE",
