@@ -40,7 +40,7 @@ _INTEGRAL = set(_INTEGRAL_RANK)
 
 # ---- broadcast-cap calibration (one place — r12 verdict minor #4) ----
 # The three caps below (STATE_BROADCAST_MAX_ROWS, GRAPH_BROADCAST_MAX_ROWS,
-# ADJ_BROADCAST_MAX_ENTRIES) are calibrated to the 8 GB-heap local[32]
+# ADJ_ID_BROADCAST_MAX_ENTRIES) are calibrated to the 8 GB-heap local[32]
 # bench host: each was measured there (see the per-constant notes) and
 # sits ~4-8× under the observed OOM point, far under Spark's 8 GB
 # broadcast hard limit.  On a real cluster with larger executors they
@@ -74,28 +74,20 @@ STATE_BROADCAST_MAX_ROWS = 5_000_000
 #: the 10x scale bench) — while the sort-merge twin spills and finishes.
 GRAPH_BROADCAST_MAX_ROWS = 2_000_000
 
-#: entry bound for broadcasting a per-node neighbor-ARRAY frame
-#: (node2vec's adjacency).  Unlike a row-per-edge hash relation (whose
-#: per-key overhead OOMed at 10M keys), an array frame of E total
-#:
-#: entries hashes only its ~N node keys — 10M string entries ≈ 500 MB,
-#: comfortable, and broadcasting keeps the O(deg) per-walk fold work in
-#: the walks' own BALANCED partitioning: a shuffle join on the current
-#: node sends every walk standing on a hot node (plus its deg-sized
-#: fold) into ONE partition — measured 235 s straggler round vs 12 s
-#: for the balanced twin at the 10× bench.
-ADJ_BROADCAST_MAX_ENTRIES = 10_000_000
-
-#: entry bound for the KERNEL path's per-node neighbor-ID arrays
-#: (node2vec's default engine).  These entries are dense int64 ids
-#: (~8 B + Arrow overhead each), not node-value strings, so the same
-#: heap carries ~4× more of them than :data:`ADJ_BROADCAST_MAX_ENTRIES`
-#: budgets: 40M id entries ≈ 320 MB of broadcast build.  The gap is
-#: MEASURED, not cosmetic — the 10× co-trade graph lands at 11.7M
-#: entries, and the shuffle regime the old shared cap pushed it into
-#: took 287 s vs 100 s broadcast (per-step state⋈adjacency shuffles of
-#: the array frame dominate); at 100×+ the auto probe still degrades
-#: to shuffle, which is the regime that KEEPS WORKING past any cap.
+#: entry bound for broadcasting node2vec's per-node neighbor-ID array
+#: frame.  Unlike a row-per-edge hash relation (whose per-key overhead
+#: OOMed at 10M keys), an array frame of E total entries hashes only its
+#: ~N node keys, and its entries are dense int64 ids (~8 B + Arrow
+#: overhead each): 40M id entries ≈ 320 MB of broadcast build.
+#: Broadcasting keeps the O(deg) per-walk work in the walks' own
+#: BALANCED partitioning: a shuffle join on the current node sends every
+#: walk standing on a hot node into ONE partition (measured 235 s
+#: straggler round vs 12 s balanced at the 10× bench).  The 10×
+#: co-trade graph lands at 11.7M entries; the shuffle regime a 10M cap
+#: pushed it into took 287 s vs 100 s broadcast (per-step
+#: state⋈adjacency shuffles of the array frame dominate).  At 100×+ the
+#: auto probe still degrades to shuffle, which is the regime that KEEPS
+#: WORKING past any cap.
 ADJ_ID_BROADCAST_MAX_ENTRIES = 40_000_000
 
 
@@ -172,24 +164,6 @@ def _iter_coalesce(hint) -> int | None:
     from kafka_merge_purge_spark.operators.iterate import ITER_STATE_PARTITIONS
 
     return ITER_STATE_PARTITIONS if getattr(hint, "is_broadcast", False) else None
-
-
-def _iter_fold_width(spark, broadcast: bool) -> int | None:
-    """iterate(coalesce_to=) value for node2vec's walk loops, whose
-    per-round work is Σ_walks deg(cur) (array folds or a Python kernel):
-    in the broadcast regime keep core-count width, never below
-    ITER_STATE_PARTITIONS — narrowing to that tiny-state constant
-    throttles the fold to 4 tasks (measured r16: the 4-wide form ran
-    ~1.7× slower than 32-wide at sf0.1/local[32]).  An explicit width
-    also stops the per-round 3-branch union from growing the state 3x
-    per round (64 -> 192 -> 576 tasks by round 3 at sf0.1, measured
-    r16).  defaultParallelism keeps it scale-adaptive; shuffle-regime
-    state keeps its natural width (None)."""
-    from kafka_merge_purge_spark.operators.iterate import ITER_STATE_PARTITIONS
-
-    if not broadcast:
-        return None
-    return max(ITER_STATE_PARTITIONS, spark.sparkContext.defaultParallelism)
 
 
 def connected_components(
@@ -1708,255 +1682,6 @@ def random_walks(
     return out.select("walk_id", "start", "path")
 
 
-def node2vec_walks(
-    edges: DataFrame,
-    walk_length: int = 4,
-    walks_per_node: int = 1,
-    src: str = "src",
-    dst: str = "dst",
-    seed: str = "n2v",
-    w_return: int = 1,
-    w_near: int = 1,
-    w_far: int = 1,
-    broadcast_state: bool | str = "auto",
-    impl: str = "pandas",
-    n_adj_entries: int | None = None,
-) -> DataFrame:
-    """Second-order biased random walks (node2vec — Grover & Leskovec
-    2016, §3.2) — the p/q generalization of :func:`random_walks`: the
-    walk remembers the PREVIOUS node ``t`` and weights each neighbor
-    ``x`` of the current node by the return/in-out bias before the coin
-    flip.
-
-    Weights are EXACT POSITIVE INTEGERS (the repo-wide hash-oracle
-    convention — the paper's 1/p, 1, 1/q rationals scaled by any common
-    multiple give identical distributions)::
-
-        w(x) = w_return  if x == t                    (α = 1/p)
-               w_near    if directed edge t→x exists  (α = 1,  d(t,x)=1)
-               w_far     otherwise                    (α = 1/q, d(t,x)=2)
-
-    The FIRST step has no previous node: every neighbor weighs 1 (the
-    paper samples the first step uniformly).  Membership is tested on
-    the DIRECTED edge set — pass a symmetrized list for undirected
-    semantics.  Determinism: the md5-affine coin of
-    :func:`random_walks` (``md5(seed:walk:step:cur)`` → 60-bit int)
-    reduced mod the walk's total candidate weight, located in the
-    cumulative-weight scan over the dst-sorted neighbor order — every
-    engine replays identical walks, so the output carries a FULL hash
-    oracle (steps unrolled as chained CTEs expressing the same window
-    cumsum).
-
-    Scale shape (on :func:`iterate`) — the design the 10× bench forced,
-    with three measured dead ends recorded so they stay dead:
-
-    * the adjacency collapses ONCE into per-node neighbor-ID ARRAYS
-      (int64, dst-order) plus a dense node index; per step the O(walks)
-      state joins that frame for the current node and (steps ≥ 1) the
-      previous node, and an Arrow kernel computes weights / total /
-      coin / cumulative pick VECTORIZED per row — ``np.isin`` and
-      ``cumsum`` over int64, never object strings, with one id→node
-      join materializing the picked neighbor.  Per-step work is
-      inherently ``Σ_walks deg(cur)`` (every neighbor must be weighed;
-      degree-biased picks concentrate that on hot nodes) — the kernel
-      makes each unit a C-speed integer op.
-    * dead end 1: a per-candidate JOIN (state × adjacency rows +
-      two-key membership join + two windows) — OOMed on the step-0
-      all-NULL prev key, then on a 10M-row broadcast hash relation,
-      then ran 334 s at 10×.
-    * dead end 2: per-row Catalyst array folds over STRING arrays —
-      HOF aggregate never enters codegen, and CollapseProject inlines
-      each producer into every fold iteration unless every stage is
-      pinned behind a projection barrier; even barriered, interpreted
-      string compares ran 235 s at 10×.  The barriered expression form
-      survives as ``impl="expr"`` — a pinned-equal twin (the pq_encode
-      convention), not the default.
-
-    ``broadcast_state="auto"`` probes TOTAL adjacency entries once and
-    broadcasts the array frame under
-    :data:`ADJ_BROADCAST_MAX_ENTRIES`, else the state joins shuffle.
-
-    Output: (walk_id string, start node, path array — path[0] = start,
-    len(path) ≤ walk_length + 1; walks retire early at sinks)."""
-    from pyspark.sql import Window
-
-    from kafka_merge_purge_spark.operators.iterate import iterate
-
-    if walks_per_node < 1 or walk_length < 0:
-        raise ValueError(
-            "node2vec_walks: walks_per_node >= 1 and walk_length >= 0 required"
-        )
-    if min(w_return, w_near, w_far) < 1:
-        # zero weights could zero a walk's TOTAL candidate weight (e.g.
-        # all candidates "far" with w_far=0) — the pick would be
-        # undefined; express "avoid X" with a large contrast instead
-        raise ValueError(
-            "node2vec_walks: weights must be positive integers "
-            f"(got {w_return}, {w_near}, {w_far})"
-        )
-    if impl not in ("pandas", "expr"):
-        raise ValueError(
-            f"node2vec_walks: impl must be 'pandas' or 'expr', got {impl!r}"
-        )
-    e = edges.filter(F.col(src).isNotNull() & F.col(dst).isNotNull()).select(
-        F.col(src).alias("_u"), F.col(dst).alias("_v")
-    )
-    nodes = (
-        e.select(F.col("_u").alias("node"))
-        .unionByName(e.select(F.col("_v").alias("node")))
-        .distinct()
-    )
-    node_type = dict(nodes.dtypes)["node"]
-
-    def coin(step: int):
-        return F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit(f"{seed}:"),
-                        F.col("walk_id"),
-                        F.lit(f":{step}:"),
-                        F.col("_cur").cast("string"),
-                    )
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("long")
-
-    if impl == "pandas":
-        return _node2vec_pandas(
-            e, node_type, coin, iterate,
-            walk_length, walks_per_node, seed,
-            w_return, w_near, w_far, broadcast_state, n_adj_entries,
-        )
-
-    # ---- impl="expr": the barriered Catalyst twin (pinned equal) ----
-    adj = (
-        e.distinct()
-        .groupBy("_u")
-        .agg(F.sort_array(F.collect_list("_v")).alias("_nbrs"))
-        .cache()
-    )
-    if broadcast_state == "auto":
-        if n_adj_entries is not None:
-            entries = int(n_adj_entries)
-        else:
-            entries = adj.agg(
-                F.coalesce(F.sum(F.size("_nbrs")), F.lit(0)).alias("_n")
-            ).first()["_n"]
-        broadcast_state = entries <= ADJ_BROADCAST_MAX_ENTRIES
-    elif not isinstance(broadcast_state, bool):
-        raise ValueError(
-            f"state-exchange mode must be True, False or 'auto', got {broadcast_state!r}"
-        )
-    # join hint for the per-round neighbor lookups only; the loop's state
-    # width comes from _iter_fold_width, not from _iter_coalesce
-    def hint(df):
-        return F.broadcast(df) if broadcast_state else df
-
-    starts = nodes.select(
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(walks_per_node - 1)),
-                lambda r: F.concat(
-                    F.col("node").cast("string"), F.lit("#"), r.cast("string")
-                ),
-            )
-        ).alias("walk_id"),
-        F.col("node").alias("start"),
-        F.lit(None).cast(node_type).alias("_prev"),
-        F.col("node").alias("_cur"),
-        F.array(F.col("node").cast("string")).alias("path"),
-        F.lit(False).alias("_done"),
-    )
-    cur_side = adj.select(F.col("_u").alias("_cu"), F.col("_nbrs"))
-    prev_side = adj.select(F.col("_u").alias("_pu"), F.col("_nbrs").alias("_pnbrs"))
-    from kafka_merge_purge_spark.plans.introspect import projection_barrier
-
-    def step_fn(state: DataFrame, i: int) -> DataFrame:
-        live = state.filter(~F.col("_done"))
-        j = live.join(hint(cur_side), live["_cur"] == F.col("_cu"), "left")
-        if i == 0:
-            # first step is uniform — no previous-node join at all
-            ws = F.transform(F.col("_nbrs"), lambda x: F.lit(1).cast("long"))
-            j = j.withColumn("_ws", ws)
-        else:
-            j = j.join(hint(prev_side), j["_prev"] == F.col("_pu"), "left")
-            common = F.coalesce(
-                F.array_intersect(F.col("_nbrs"), F.col("_pnbrs")),
-                F.array().cast("array<" + node_type + ">"),
-            )
-            # barrier after _mem: without it CollapseProject inlines the
-            # map build into EVERY per-neighbor lookup of the transform
-            j = projection_barrier(
-                j.withColumn(
-                    "_mem",
-                    F.map_from_arrays(
-                        common,
-                        F.array_repeat(F.lit(1), F.size(common)),
-                    ),
-                )
-            )
-            ws = F.transform(
-                F.col("_nbrs"),
-                lambda x: F.when(x == F.col("_prev"), F.lit(w_return))
-                .when(
-                    F.element_at(F.col("_mem"), x).isNotNull(), F.lit(w_near)
-                )
-                .otherwise(F.lit(w_far))
-                .cast("long"),
-            )
-            j = j.withColumn("_ws", ws)
-        # barrier after _ws: the total fold and the pick fold reference
-        # _ws once per ELEMENT — inlined, O(deg²) per row
-        j = projection_barrier(j)
-        tot = F.aggregate(
-            F.col("_ws"), F.lit(0).cast("long"), lambda acc, x: acc + x
-        )
-        j = projection_barrier(j.withColumn("_pick", F.pmod(coin(i), tot)))
-        chosen = F.aggregate(
-            F.sequence(F.lit(0), F.size("_ws") - 1),
-            F.struct(
-                F.lit(0).cast("long").alias("s"), F.lit(-1).alias("f")
-            ),
-            lambda acc, idx: F.struct(
-                (acc["s"] + F.element_at(F.col("_ws"), idx + 1)).alias("s"),
-                F.when(acc["f"] >= 0, acc["f"])
-                .when(
-                    acc["s"] + F.element_at(F.col("_ws"), idx + 1)
-                    > F.col("_pick"),
-                    idx,
-                )
-                .otherwise(F.lit(-1))
-                .alias("f"),
-            ),
-        )["f"]
-        jj = j.withColumn("_nxt", F.element_at(F.col("_nbrs"), chosen + 1))
-        has_nbrs = F.col("_nbrs").isNotNull() & (F.size("_nbrs") > 0)
-        stepped = jj.filter(has_nbrs).select(
-            "walk_id",
-            "start",
-            F.col("_cur").alias("_prev"),
-            F.col("_nxt").alias("_cur"),
-            F.concat(
-                F.col("path"), F.array(F.col("_nxt").cast("string"))
-            ).alias("path"),
-            F.lit(False).alias("_done"),
-        )
-        retired = jj.filter(~has_nbrs).select(
-            "walk_id", "start", "_prev", "_cur", "path", F.lit(True).alias("_done")
-        )
-        return state.filter(F.col("_done")).unionByName(stepped).unionByName(retired)
-
-    out = iterate(starts, step_fn, max_rounds=walk_length,
-                  coalesce_to=_iter_fold_width(e.sparkSession, broadcast_state))
-    adj.unpersist()
-    return out.select("walk_id", "start", "path")
-
-
 #: per-bucket row cap for the two-level prefix-sum rank.  A bucket-local
 #: row_number over more rows than this is itself the single-task-window
 #: hazard the pattern exists to avoid, so oversized prefixes split onto
@@ -2068,13 +1793,112 @@ def _dense_node_index(nodes: DataFrame) -> DataFrame:
     )
 
 
-def _node2vec_pandas(
-    e, node_type, coin, iterate,
-    walk_length, walks_per_node, seed, w_return, w_near, w_far,
-    broadcast_state, n_adj_entries=None,
-):
-    """The default node2vec engine: neighbor-ID arrays + Arrow kernel.
-    See :func:`node2vec_walks` for the design rationale."""
+def node2vec_walks(
+    edges: DataFrame,
+    walk_length: int = 4,
+    walks_per_node: int = 1,
+    src: str = "src",
+    dst: str = "dst",
+    seed: str = "n2v",
+    w_return: int = 1,
+    w_near: int = 1,
+    w_far: int = 1,
+    broadcast_state: bool | str = "auto",
+    n_adj_entries: int | None = None,
+) -> DataFrame:
+    """Second-order biased random walks (node2vec — Grover & Leskovec
+    2016, §3.2) — the p/q generalization of :func:`random_walks`: the
+    walk remembers the PREVIOUS node ``t`` and weights each neighbor
+    ``x`` of the current node by the return/in-out bias before the coin
+    flip.
+
+    Weights are EXACT POSITIVE INTEGERS (the repo-wide hash-oracle
+    convention — the paper's 1/p, 1, 1/q rationals scaled by any common
+    multiple give identical distributions)::
+
+        w(x) = w_return  if x == t                    (α = 1/p)
+               w_near    if directed edge t→x exists  (α = 1,  d(t,x)=1)
+               w_far     otherwise                    (α = 1/q, d(t,x)=2)
+
+    The FIRST step has no previous node: every neighbor weighs 1 (the
+    paper samples the first step uniformly).  Membership is tested on
+    the DIRECTED edge set — pass a symmetrized list for undirected
+    semantics.  Determinism: the md5-affine coin of
+    :func:`random_walks` (``md5(seed:walk:step:cur)`` → 60-bit int)
+    reduced mod the walk's total candidate weight, located in the
+    cumulative-weight scan over the dst-sorted neighbor order — every
+    engine replays identical walks, so the output carries a FULL hash
+    oracle (steps unrolled as chained CTEs expressing the same window
+    cumsum).
+
+    Scale shape (on :func:`iterate`) — the design the 10× bench forced,
+    with two measured dead ends recorded so they stay dead:
+
+    * the adjacency collapses ONCE into per-node neighbor-ID ARRAYS
+      (int64, dst-order) plus a dense node index; per step the O(walks)
+      state joins that frame for the current node and (steps ≥ 1) the
+      previous node, and an Arrow kernel computes weights / total /
+      coin / cumulative pick VECTORIZED per row — ``np.isin`` and
+      ``cumsum`` over int64, never object strings, with one id→node
+      join materializing the picked neighbor.  Per-step work is
+      inherently ``Σ_walks deg(cur)`` (every neighbor must be weighed;
+      degree-biased picks concentrate that on hot nodes) — the kernel
+      makes each unit a C-speed integer op.
+    * dead end 1: a per-candidate JOIN (state × adjacency rows +
+      two-key membership join + two windows) — OOMed on the step-0
+      all-NULL prev key, then on a 10M-row broadcast hash relation,
+      then ran 334 s at 10×.
+    * dead end 2: per-row Catalyst array folds over STRING arrays —
+      HOF aggregate never enters codegen, and CollapseProject inlines
+      each producer into every fold iteration unless every stage is
+      pinned behind a projection barrier; even barriered, interpreted
+      string compares ran 235 s at 10×.
+
+    ``broadcast_state="auto"`` probes TOTAL adjacency entries once and
+    broadcasts the neighbor-ID array frame under
+    :data:`ADJ_ID_BROADCAST_MAX_ENTRIES`, else the state joins shuffle.
+
+    Output: (walk_id string, start node, path array — path[0] = start,
+    len(path) ≤ walk_length + 1; walks retire early at sinks)."""
+    from kafka_merge_purge_spark.operators.iterate import (
+        ITER_STATE_PARTITIONS,
+        iterate,
+    )
+
+    if walks_per_node < 1 or walk_length < 0:
+        raise ValueError(
+            "node2vec_walks: walks_per_node >= 1 and walk_length >= 0 required"
+        )
+    if min(w_return, w_near, w_far) < 1:
+        # zero weights could zero a walk's TOTAL candidate weight (e.g.
+        # all candidates "far" with w_far=0) — the pick would be
+        # undefined; express "avoid X" with a large contrast instead
+        raise ValueError(
+            "node2vec_walks: weights must be positive integers "
+            f"(got {w_return}, {w_near}, {w_far})"
+        )
+    e = edges.filter(F.col(src).isNotNull() & F.col(dst).isNotNull()).select(
+        F.col(src).alias("_u"), F.col(dst).alias("_v")
+    )
+
+    def coin(step: int):
+        return F.conv(
+            F.substring(
+                F.md5(
+                    F.concat(
+                        F.lit(f"{seed}:"),
+                        F.col("walk_id"),
+                        F.lit(f":{step}:"),
+                        F.col("_cur").cast("string"),
+                    )
+                ),
+                1,
+                15,
+            ),
+            16,
+            10,
+        ).cast("long")
+
     # Materialize the distinct edge list ONCE (r16): the raw `e` sits on
     # top of whatever upstream the caller built (x_node2vec: a
     # lineitem⋈orders co-trade join, ~2 s/eval at sf0.1), and the
@@ -2089,6 +1913,7 @@ def _node2vec_pandas(
         .unionByName(de.select(F.col("_v").alias("node")))
         .distinct()
     )
+    node_type = dict(nodes.dtypes)["node"]
     idx = _dense_node_index(nodes).cache()
     with_ids = (
         de.join(idx.select(F.col(idx.columns[0]).alias("_u"), F.col("_nid").alias("_uid")), "_u")
@@ -2121,7 +1946,7 @@ def _node2vec_pandas(
             f"state-exchange mode must be True, False or 'auto', got {broadcast_state!r}"
         )
     # join hint for the per-round neighbor lookups only; the loop's state
-    # width comes from _iter_fold_width, not from _iter_coalesce
+    # width is set below, not by _iter_coalesce
     def hint(df):
         return F.broadcast(df) if broadcast_state else df
 
@@ -2318,12 +2143,22 @@ def _node2vec_pandas(
             .unionByName(retired)
         )
 
-    out = iterate(starts, step_fn, max_rounds=walk_length,
-                  coalesce_to=_iter_fold_width(e.sparkSession, broadcast_state))
+    # Loop width: per-round work is Σ_walks deg(cur), so in the broadcast
+    # regime keep core-count width, never below ITER_STATE_PARTITIONS —
+    # narrowing to that tiny-state constant throttled the kernel to 4
+    # tasks (measured r16: ~1.7× slower than 32-wide at sf0.1/local[32]).
+    # An explicit width also stops the per-round 3-branch union from
+    # growing the state 3× per round (64 → 192 → 576 tasks by round 3,
+    # measured r16).  Shuffle-regime state keeps its natural width.
+    width = (
+        max(ITER_STATE_PARTITIONS, e.sparkSession.sparkContext.defaultParallelism)
+        if broadcast_state
+        else None
+    )
+    out = iterate(starts, step_fn, max_rounds=walk_length, coalesce_to=width)
     adj.unpersist()
     idx.unpersist()
     return out.select("walk_id", "start", "path")
-
 
 
 def skipgram_pairs(

@@ -411,7 +411,6 @@ def quality_classifier(
     bias: float = 0.0,
     text_col: str = "text",
     id_col: str = "doc_id",
-    impl: str = "kernel",
 ) -> DataFrame:
     """Linear quality-classifier scoring over hashed n-gram features —
     the standard fasttext-style curation gate (public recipe: CCNet /
@@ -420,11 +419,9 @@ def quality_classifier(
 
     ``weights`` is the caller's model (one weight per hash bucket; its
     length IS the feature dimension) — explicitly an input: this repo
-    ships no trained model.  Features are the existing feature-hashing
-    long form (:func:`text.hashed_embedding`: signed ±1 token counts
-    per ``(h>>1) % dim`` bucket — r7 verdict item 8), so the feature
-    extraction is shared with the embedding bridge and stays one
-    explode + one map-side-combined aggregate.
+    ships no trained model.  Features are those of
+    :func:`text.hashed_embedding`: signed ±1 token counts per
+    ``(h>>1) % dim`` bucket (r7 verdict item 8).
 
     Engine-portable exactness: weights and bias are quantized to 1e-6
     (``floor(w·1e6 + 0.5)`` — the dedup tier's ``_quantize`` rule), the
@@ -437,97 +434,61 @@ def quality_classifier(
     Output: one row per document with ≥1 alphanumeric token —
     ``(id_col, margin double, prob double)``.
 
-    ``impl`` picks the physical form (identical values, pinned equal):
-
-    - ``"kernel"`` (default, r9): ONE stateless Arrow kernel computes
-      each document's exact int64 dot in-process (same md5 → bucket →
-      ±sign arithmetic as ``text.hashed_embedding``, pure-Python per
-      token) and the margin→sigmoid stays a Spark expression — ZERO
-      shuffles.  The agg form's token explode pushes ~n_docs·dim
-      partial rows through an exchange; at 100 TB the classifier gate
-      should be a map stage, and statelessness makes this form
-      streaming-composable for free.
-    - ``"agg"``: the r8 explode + map-side-combined aggregate over
-      ``hashed_embedding`` — kept as the kernel's equality pin.
-
-    Normalization parity (r9 ADVICE): Spark 4's default UTF8_BINARY
-    ``lower()`` implements the locale-invariant Unicode default
-    lowercase mapping — the same mapping as Python ``str.lower()`` —
-    so the kernel and agg forms agree on non-ASCII text too (İ→i̇,
-    K→k, Σ→σ, ǅ→ǆ, ligatures; pinned on a mixed-script corpus in
-    ``test_quality_classifier_kernel_matches_agg_non_ascii``).  On a
-    pre-4.0 Spark whose ``lower`` routed through the JVM default
-    locale, a tr/az-locale JVM could diverge on dotted-I — use
-    ``impl="agg"`` there."""
+    Physical form (r9): ONE stateless Arrow kernel computes each
+    document's exact int64 dot in-process (same md5 → bucket → ±sign
+    arithmetic as ``hashed_embedding``, pure-Python per token) and the
+    margin→sigmoid stays a Spark expression — ZERO shuffles.  An
+    explode + aggregate over ``hashed_embedding`` would push
+    ~n_docs·dim partial rows through an exchange; at 100 TB the
+    classifier gate should be a map stage, and statelessness makes it
+    streaming-composable for free.  Python ``str.lower()`` is the same
+    locale-invariant Unicode default lowercase mapping as Spark 4's
+    UTF8_BINARY ``lower()``, so the kernel scores non-ASCII text
+    exactly as the feature frame does (pinned in pytest)."""
+    import hashlib
     import math
+    import re
 
-    from .text import hashed_embedding
+    import pandas as pd
 
     dim = len(weights)
     if dim == 0:
         raise ValueError("quality_classifier: weights must be non-empty")
-    qw = [int(math.floor(w * 1e6 + 0.5)) for w in weights]
+    qw = tuple(int(math.floor(w * 1e6 + 0.5)) for w in weights)
     bias_q = int(math.floor(bias * 1e6 + 0.5))
+    id_type = df.schema[id_col].dataType.simpleString()
 
-    def finish(margin_src: DataFrame) -> DataFrame:
-        return margin_src.select(
-            id_col,
-            "margin",
-            F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-F.col("margin"))), 6).alias(
-                "prob"
-            ),
-        )
+    def score(batches):
+        has_alnum = re.compile(r"[a-zA-Z0-9]")
+        squeeze = re.compile(r"[^a-z0-9]+")
+        for pdf in batches:
+            ids, mq = [], []
+            for i, t in zip(pdf[id_col], pdf[text_col]):
+                if t is None or not has_alnum.search(t):
+                    continue  # hashed_embedding's rlike degenerate filter
+                # normalize() twin: lower + squeeze + trim (post-
+                # squeeze only plain spaces remain, so strip == trim)
+                norm = squeeze.sub(" ", t.lower()).strip()
+                dot = 0
+                for tok in norm.split(" "):
+                    h = int(hashlib.md5(tok.encode()).hexdigest()[:15], 16)
+                    w = qw[(h >> 1) % dim]
+                    dot += w if (h & 1) == 0 else -w
+                ids.append(i)
+                mq.append(dot + bias_q)
+            if ids:
+                yield pd.DataFrame({id_col: ids, "_mq": mq})
 
-    if impl == "kernel":
-        import hashlib
-        import re
-
-        import pandas as pd
-
-        id_type = df.schema[id_col].dataType.simpleString()
-        qw_t = tuple(qw)
-
-        def score(batches):
-            has_alnum = re.compile(r"[a-zA-Z0-9]")
-            squeeze = re.compile(r"[^a-z0-9]+")
-            for pdf in batches:
-                ids, mq = [], []
-                for i, t in zip(pdf[id_col], pdf[text_col]):
-                    if t is None or not has_alnum.search(t):
-                        continue  # the agg form's rlike degenerate filter
-                    # normalize() twin: lower + squeeze + trim (post-
-                    # squeeze only plain spaces remain, so strip == trim)
-                    norm = squeeze.sub(" ", t.lower()).strip()
-                    dot = 0
-                    for tok in norm.split(" "):
-                        h = int(hashlib.md5(tok.encode()).hexdigest()[:15], 16)
-                        w = qw_t[(h >> 1) % dim]
-                        dot += w if (h & 1) == 0 else -w
-                    ids.append(i)
-                    mq.append(dot + bias_q)
-                if ids:
-                    yield pd.DataFrame({id_col: ids, "_mq": mq})
-
-        mq = df.select(id_col, text_col).mapInPandas(
-            score, schema=f"{id_col} {id_type}, _mq long"
-        )
-        return finish(
-            mq.select(
-                id_col,
-                F.round(F.col("_mq").cast("double") / 1e6, 6).alias("margin"),
-            )
-        )
-    if impl != "agg":
-        raise ValueError(f"quality_classifier: impl must be 'kernel' or 'agg', got {impl!r}")
-    feats = hashed_embedding(df, dim=dim, text_col=text_col, id_col=id_col)
-    wcol = F.element_at(
-        F.array(*[F.lit(q).cast("long") for q in qw]),
-        F.col("bucket").cast("int") + 1,
+    mq = df.select(id_col, text_col).mapInPandas(
+        score, schema=f"{id_col} {id_type}, _mq long"
     )
-    margin = (
-        (F.sum(F.col("weight") * wcol) + F.lit(bias_q)).cast("double") / 1e6
+    return mq.select(
+        id_col, F.round(F.col("_mq").cast("double") / 1e6, 6).alias("margin")
+    ).select(
+        id_col,
+        "margin",
+        F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-F.col("margin"))), 6).alias("prob"),
     )
-    return finish(feats.groupBy(id_col).agg(F.round(margin, 6).alias("margin")))
 
 
 def curation_pipeline(df: DataFrame) -> DataFrame:
@@ -877,7 +838,7 @@ def _gram_buckets(
     preserved (DSIR scores count occurrences, not presence)."""
     from kafka_merge_purge_spark.operators.dedup import md5_int, normalize
     from kafka_merge_purge_spark.operators.text import tokens
-    from kafka_merge_purge_spark.plans.introspect import projection_barrier
+    from kafka_merge_purge_spark.plans.introspect import projection_barrier, spread_width
 
     # tokenize ONCE per row into a barriered column (r16, the textrank
     # lesson): the bigram transform's lambda references the token array
@@ -899,7 +860,7 @@ def _gram_buckets(
     # the gram explode is CPU-bound per row: spread the corpus over the
     # cluster BEFORE it, or a small parquet (few input splits) pins the
     # whole stage to a handful of tasks (measured 98 s → ~8 s at 10×)
-    n_part = max(df.sparkSession.sparkContext.defaultParallelism, 8)
+    n_part = spread_width(df.sparkSession)
     src = df.filter(F.col(text_col).isNotNull())
     src = src.repartition(n_part, *keep) if keep else src.repartition(n_part)
     src = projection_barrier(src.select(*keep, t_expr.alias("_toks")))

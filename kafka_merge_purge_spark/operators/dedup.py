@@ -14,8 +14,8 @@ Engine-portability invariant: every hash bottoms out in md5 (identical in
 Spark and DuckDB), mapped to int64 via the first 15 hex chars (60 bits,
 no sign issues), so the DuckDB oracle reproduces signatures bit-for-bit.
 Shingling and hashing are narrow map stages (md5 always JVM-side; the
-affine min-hash / majority-vote folds have vectorized mapInPandas forms
-kept bit-identical to their expression twins).  The LSH shuffles are the
+affine min-hash and majority-vote folds run as mapInPandas kernels with
+the same integer arithmetic as the md5 expressions).  The LSH shuffles are the
 band self-join on (id, band, band_key), the pair-dedup, and one narrow
 shingle re-join per side for the Jaccard verify — exactly the shuffles
 the algorithm requires, each at its minimal width.
@@ -34,6 +34,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from kafka_merge_purge_spark.operators.text import tokens
+from kafka_merge_purge_spark.plans.introspect import spread_width
 
 DEFAULT_NUM_HASHES = 16
 DEFAULT_BANDS = 4  # 4 bands × 4 rows — s-curve threshold ≈ (1/4)^(1/4) ≈ 0.71
@@ -109,7 +110,6 @@ def shingle_frame(
     text_col: str = "text",
     id_col: str = "doc_id",
     k: int = 3,
-    vectorized: bool = True,
     adaptive: bool = False,
 ) -> DataFrame:
     """``(id, sh)`` — each document's distinct word k-shingle array.
@@ -126,33 +126,18 @@ def shingle_frame(
     length (ADVICE r6) — so flipping it on a mixed corpus never changes
     the result for the documents the default already handled.
 
-    Two physical forms, identical shingle SETS (and identical
-    first-occurrence order):
-
-    - vectorized (default): normalization + tokenization stay JVM
-      expressions (string semantics cannot diverge), then ONE
-      ``mapInPandas`` pass slices token arrays in native Python —
-      replacing the interpreted sequence→slice→concat_ws HOF chain
-      (O(n·k) expression interpretation per row; the same cost the r4
-      repetition_score vectorization removed) with list slicing over
-      Arrow batches.  ``dict.fromkeys`` dedup reproduces
-      ``array_distinct``'s keep-first-occurrence order exactly.
-    - expression form: the ``shingles()`` column in Catalyst, for
-      environments where Python workers are undesirable.
-
-    NULL text folds to ``[""]`` on both forms — in Catalyst,
-    ``greatest(NULL, 1)`` is 1 and ``concat_ws`` over a NULL slice is
-    ``""``, so the expression chain never yields NULL; the kernel
-    reproduces that (callers that must exclude degenerate docs filter
-    before this stage, as minhash_lsh_pairs does).
+    Normalization + tokenization stay JVM expressions (string
+    semantics cannot diverge), then ONE ``mapInPandas`` pass slices
+    token arrays in native Python — the interpreted
+    sequence→slice→concat_ws HOF chain costs O(n·k) expression
+    interpretation per row.  The output equals the :func:`shingles`
+    column: the same shingle SETS in the same first-occurrence order
+    (``dict.fromkeys`` reproduces ``array_distinct``), and NULL text
+    folds to ``[""]`` as it does there (``greatest(NULL, 1)`` is 1 and
+    ``concat_ws`` over a NULL slice is ``""``).  Callers that must
+    exclude degenerate docs filter before this stage, as
+    minhash_lsh_pairs does.
     """
-    if not vectorized:
-        if adaptive:
-            raise ValueError("shingle_frame: adaptive requires the vectorized path")
-        return df.select(
-            F.col(id_col).alias("id"), shingles(F.col(text_col), k).alias("sh")
-        )
-
     import pandas as pd
     from collections.abc import Iterator
 
@@ -169,7 +154,7 @@ def shingle_frame(
             out = []
             for tk in pdf["_toks"]:
                 if tk is None:
-                    # expression twin: greatest(NULL-2, 1) → one slot,
+                    # as shingles(): greatest(NULL-2, 1) → one slot,
                     # concat_ws over the NULL slice → "" — never NULL
                     out.append([""])
                     continue
@@ -237,44 +222,18 @@ def minhash_signatures(
     )
 
 
-def _banded_minhash_keys(
-    sh_df: DataFrame, num_hashes: int, bands: int, vectorized: bool
-) -> DataFrame:
+def _banded_minhash_keys(sh_df: DataFrame, num_hashes: int, bands: int) -> DataFrame:
     """(id, band, band_key) for every document in ``sh_df`` (= (id, sh)).
 
-    Two physical forms, identical keys:
-
-    - vectorized (default): the per-shingle md5 stays a JVM expression;
-      ONE ``mapInPandas`` pass then computes all ``num_hashes`` affine
-      min-hashes as a single numpy outer product and emits the banded
-      rows directly — replacing ``num_hashes`` interpreted HOF array
-      passes plus the explode with one Arrow-batched kernel.  All
-      operands stay < 2⁶³ so numpy int64 reproduces the JVM arithmetic
-      exactly, and ``str(int)`` equals ``concat_ws`` for the key join.
-    - expression form: signature + explode fully in Catalyst.
+    The per-shingle md5 stays a JVM expression; ONE ``mapInPandas``
+    pass then computes all ``num_hashes`` affine min-hashes as a single
+    numpy outer product and emits the banded rows directly — in place
+    of ``num_hashes`` interpreted HOF array passes plus an explode.
+    All operands stay < 2⁶³ so numpy int64 reproduces the JVM
+    arithmetic of :func:`minhash_signature_from_shingles` exactly, and
+    the band key is its signature slice joined with ``_``.
     """
     rows = num_hashes // bands
-    if not vectorized:
-        sigs = sh_df.select(
-            "id", minhash_signature_from_shingles(F.col("sh"), num_hashes).alias("sig")
-        )
-        return sigs.select(
-            "id",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("band"),
-                            F.concat_ws(
-                                "_", *[F.col("sig")[b * rows + r] for r in range(rows)]
-                            ).alias("band_key"),
-                        )
-                        for b in range(bands)
-                    ]
-                )
-            ).alias("bk"),
-        ).select("id", F.col("bk.band").alias("band"), F.col("bk.band_key").alias("band_key"))
-
     import numpy as np
     import pandas as pd
     from collections.abc import Iterator
@@ -313,7 +272,6 @@ def minhash_lsh_pairs(
     bands: int = DEFAULT_BANDS,
     k: int = 3,
     jaccard_threshold: float = 0.7,
-    vectorized: bool = True,
     persist_shingles: bool = True,
     adaptive: bool = False,
 ) -> DataFrame:
@@ -345,7 +303,7 @@ def minhash_lsh_pairs(
     # Scale posture: small corpora arrive as one file → one partition; the
     # signature map stage must parallelize, so spread rows first (at real
     # scale the scan already has many partitions and AQE coalesces).
-    n_part = max(df.sparkSession.sparkContext.defaultParallelism, 8)
+    n_part = spread_width(df.sparkSession)
     # Degenerate documents (text normalizing to nothing) all shingle to
     # [""] and would collide in every band — a quadratic mega-bucket at
     # scale.  Drop them BEFORE shingling; the predicate is a cheap
@@ -358,11 +316,10 @@ def minhash_lsh_pairs(
         text_col,
         id_col,
         k,
-        vectorized,
         adaptive=adaptive,
     )
     return _banded_jaccard_pairs(
-        sh_df, num_hashes, bands, jaccard_threshold, vectorized, persist_shingles
+        sh_df, num_hashes, bands, jaccard_threshold, persist_shingles
     )
 
 
@@ -371,7 +328,6 @@ def _banded_jaccard_pairs(
     num_hashes: int,
     bands: int,
     jaccard_threshold: float,
-    vectorized: bool,
     persist_sets: bool,
 ) -> DataFrame:
     """Banded candidates + exact-Jaccard verify over an ``(id, sh)``
@@ -390,7 +346,7 @@ def _banded_jaccard_pairs(
     # side AFTER the candidate pairs are deduped (two narrow hash joins
     # whose shuffle width is 1× corpus shingle bytes each, and whose
     # pairs side is only the surviving candidates).
-    banded = _banded_minhash_keys(sh_df, num_hashes, bands, vectorized)
+    banded = _banded_minhash_keys(sh_df, num_hashes, bands)
     left = banded.alias("a")
     right = banded.alias("b")
     cand = (
@@ -428,7 +384,6 @@ def set_similarity_pairs(
     num_hashes: int = DEFAULT_NUM_HASHES,
     bands: int = DEFAULT_BANDS,
     jaccard_threshold: float = 0.5,
-    vectorized: bool = True,
     persist_sets: bool = True,
 ) -> DataFrame:
     """Generic set-similarity join over ANY ``array<string>`` column —
@@ -445,13 +400,12 @@ def set_similarity_pairs(
         F.col(id_col).alias("id"),
         F.array_distinct(F.col(set_col)).alias("sh"),
     ).filter(F.col("sh").isNotNull() & (F.size("sh") > 0))
-    n_part = max(df.sparkSession.sparkContext.defaultParallelism, 8)
+    n_part = spread_width(df.sparkSession)
     return _banded_jaccard_pairs(
         sh_df.repartition(n_part, "id"),
         num_hashes,
         bands,
         jaccard_threshold,
-        vectorized,
         persist_sets,
     )
 
@@ -644,7 +598,7 @@ def minhash_lsh_pairs_against(
     incremental-ingest form used to keep silently dropping CJK docs
     after the self-join form was fixed).
     """
-    n_part = max(new_df.sparkSession.sparkContext.defaultParallelism, 8)
+    n_part = spread_width(new_df.sparkSession)
     content_re = r"[\p{L}\p{Nd}]" if adaptive else "[a-zA-Z0-9]"
 
     def prep(df: DataFrame) -> DataFrame:
@@ -664,8 +618,8 @@ def minhash_lsh_pairs_against(
         return sh
 
     sh_new, sh_ref = prep(new_df), prep(ref_df)
-    banded_new = _banded_minhash_keys(sh_new, num_hashes, bands, vectorized=True)
-    banded_ref = _banded_minhash_keys(sh_ref, num_hashes, bands, vectorized=True)
+    banded_new = _banded_minhash_keys(sh_new, num_hashes, bands)
+    banded_ref = _banded_minhash_keys(sh_ref, num_hashes, bands)
     cand = (
         banded_new.select(
             F.col("id").alias("new_id"), "band", "band_key"
@@ -792,7 +746,7 @@ def ngram_jaccard_pairs(
     Quadratic — the correctness oracle for MinHash-LSH, and only sane on
     small/blocked inputs.  At scale, call minhash_lsh_pairs and use this
     form inside buckets only."""
-    n_part = max(df.sparkSession.sparkContext.defaultParallelism, 8)
+    n_part = spread_width(df.sparkSession)
     sh = shingle_frame(df.repartition(n_part, id_col), text_col, id_col, k)
     a, b = sh.alias("a"), sh.alias("b")
     pairs = a.join(b, F.col("a.id") < F.col("b.id"))
@@ -813,35 +767,20 @@ def simhash(
     text_col: str = "text",
     id_col: str = "doc_id",
     bits: int = 32,
-    vectorized: bool = True,
 ) -> DataFrame:
     """32-bit SimHash: per-token 60-bit md5 hash; fingerprint bit j is set
     iff at least half the tokens have bit j set.
 
-    Two physical forms, bit-identical results (pure integer math):
-
-    - vectorized (default): the md5 token hashing stays a JVM expression
-      (one ``transform`` pass), then a single ``mapInPandas`` does the
-      ``bits``-wide majority vote in numpy — replacing ``bits``
-      interpreted array passes per row with one Arrow-batched GEMM-ish
-      popcount, ~4x faster at sf0.1 and flat in ``bits``.
-    - expression form: everything in Catalyst (one filter+size per bit);
-      keeps the whole plan in codegen for environments where Python
-      workers are undesirable."""
-    n_part = max(df.sparkSession.sparkContext.defaultParallelism, 8)
+    The md5 token hashing stays a JVM expression (one ``transform``
+    pass), then a single ``mapInPandas`` does the ``bits``-wide majority
+    vote in numpy — one Arrow-batched popcount in place of ``bits``
+    interpreted array passes per row, ~4x faster at sf0.1 and flat in
+    ``bits``.  Pure integer math, so the DuckDB oracle replays it
+    bit for bit."""
+    n_part = spread_width(df.sparkSession)
     df = df.repartition(n_part, id_col)
     toks = F.array_distinct(tokens(normalize(F.col(text_col))))
     hashes = F.transform(toks, lambda t: md5_int(t))
-    if not vectorized:
-        n = F.size(hashes)
-        bit_terms = []
-        for j in range(bits):
-            ones = F.size(F.filter(hashes, lambda h: F.shiftright(h, j).bitwiseAND(F.lit(1)) == 1))
-            bit_terms.append(F.when(ones * 2 >= n, F.lit(2 ** j).cast("long")).otherwise(F.lit(0).cast("long")))
-        fp = bit_terms[0]
-        for t in bit_terms[1:]:
-            fp = fp + t
-        return df.select(F.col(id_col), fp.alias("simhash"))
 
     import numpy as np
     import pandas as pd
@@ -855,8 +794,7 @@ def simhash(
             fps = np.empty(len(pdf), dtype=np.int64)
             for i, hs in enumerate(pdf["_hashes"]):
                 if hs is None:
-                    # NULL text → NULL hashes: the expression form's
-                    # when(NULL).otherwise(0) chain yields 0 — match it
+                    # NULL text → NULL hashes → fingerprint 0
                     fps[i] = 0
                     continue
                 h = np.asarray(hs, dtype=np.int64)
@@ -1532,7 +1470,6 @@ def semantic_dedup(
     k: int | None = None,
     iters: int = 2,
     centroids: list[list[float]] | None = None,
-    strategy: str = "gemm",
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023, the
     public cluster-then-prune recipe; r7 verdict item 3): k-means cells
@@ -1542,15 +1479,15 @@ def semantic_dedup(
     keep-lowest-id variant of the paper's keep-one-per-duplicate-group
     rule (no iteration order to tune, SQL-replayable).
 
-    Composition of existing pieces, nothing new physically:
-    ``cluster.kmeans_assign`` (narrow literal-centroid projection; pass
-    ``centroids`` from a prior fit to amortize, the x_kmeans pattern) →
-    within-cell self-join keyed on ``cell_id`` carrying ``(id, cell)``
-    ONLY → :func:`score_candidate_pairs` (vectors re-enter at 1× width
-    against surviving candidates, bit-identical math to the exact
-    scorer) → a distinct + left-anti mark.  No shuffle in the pipeline
-    is wider than ``(id, cell)`` except the scorer's own 1×-vector
-    joins, which every dedup path pays.
+    Plan: ``cluster.kmeans_assign`` (narrow literal-centroid
+    projection; pass ``centroids`` from a prior fit to amortize, the
+    x_kmeans pattern) → ONE shuffle of ``(id, cell, vector)`` groups
+    each cell onto an executor → a chunked exact int64 GEMM over the
+    cell's quantized matrix marks the pruned rows.  There is no pair
+    frame, so each vector ships once, not once per candidate pair.  The
+    arithmetic is bit-identical to :func:`score_candidate_pairs`
+    (``_quantize`` → integer dot → ``np.round(dot/(√aa·√bb), 6)`` with
+    per-row sqrts), so the DuckDB hash oracle agrees exactly.
 
     At 100 TB: cell population — not corpus size — bounds the pairwise
     work (cells ~n/k rows; k ~ √n balances, exactly the IVF sizing
@@ -1560,8 +1497,7 @@ def semantic_dedup(
     quadratic-by-default a fixed k degenerates to at 100× (r8 verdict
     item 3 — the same class of fix as the junk_cos auto-estimation).
     Pass explicit ``k`` to pin the geometry (the oracle gate does, so
-    its unrolled-Lloyd SQL stays tractable).  Skewed cells inherit AQE
-    skew-split on the cell_id join.
+    its unrolled-Lloyd SQL stays tractable).
 
     Rows whose vector is NULL are dropped (they belong to no cell —
     same contract as ``kmeans_cluster_stats``).  Output: one row per
@@ -1581,43 +1517,7 @@ def semantic_dedup(
     tagged = assigned.filter(F.col("cluster_id").isNotNull()).select(
         F.col(id_col), F.col("cluster_id").alias("cell_id"), F.col(vec_col)
     )
-    if strategy == "pairs":
-        # legacy physical form: explicit candidate pairs through the
-        # rowwise scorer — every pair ships BOTH vectors through two
-        # hash joins (~|pairs| · 2 · dim doubles of shuffle).  Kept for
-        # the A/B pin; the gemm form below is the measured default.
-        cells = tagged.select(id_col, "cell_id")
-        a = cells.select(F.col(id_col).alias("id_a"), "cell_id")
-        b = cells.select(F.col(id_col).alias("id_b"), "cell_id")
-        cand = (
-            a.join(b, "cell_id")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-        )
-        dup = score_candidate_pairs(cand, emb, id_col, vec_col, threshold)
-        dropped = dup.select(F.col("id_b").alias(id_col)).distinct().withColumn(
-            "_drop", F.lit(1)
-        )
-        return cells.join(dropped, id_col, "left").select(
-            id_col,
-            "cell_id",
-            F.when(F.col("_drop").isNull(), F.lit(1))
-            .otherwise(F.lit(0))
-            .alias("is_kept"),
-        )
-    if strategy != "gemm":
-        raise ValueError(f"semantic_dedup: strategy must be 'gemm' or 'pairs', got {strategy!r}")
-    # gemm (default, r9): ONE shuffle of (id, cell, vector) groups each
-    # cell onto an executor; the within-cell prune is a chunked exact
-    # int64 GEMM over the quantized matrix — no pair frame, no vector
-    # bytes per PAIR (the pairs form shipped ~|pairs|·2·dim doubles
-    # through its scorer joins; this ships each vector once).  The
-    # arithmetic is bit-identical to score_candidate_pairs (_quantize →
-    # integer dot → np.round(dot/(√aa·√bb), 6) with per-row sqrts), so
-    # the DuckDB hash oracle and the pairs strategy agree exactly —
-    # pinned in pytest.  Chunking bounds kernel memory at
-    # ~chunk·|cell| int64s; cell population (√n under auto-k), not
-    # corpus size, bounds the quadratic work, same as before.
+    # chunking bounds kernel memory at ~chunk·|cell| int64s
     import numpy as np
     import pandas as pd
 
@@ -1663,24 +1563,20 @@ def positional_gram_hashes(
     k: int = 5,
     text_col: str = "text",
     id_col: str = "doc_id",
-    vectorized: bool = True,
     adaptive: bool = False,
 ) -> DataFrame:
     """``(id, pos, h)`` — 1-based positional k-gram 60-bit hashes of the
     normalized token stream (NON-distinct: position matters here, unlike
     :func:`shingle_frame`'s set form).
 
-    Two physical forms, identical output (pinned in pytest):
-
-    - vectorized (default): JVM normalization/tokenization (string
-      semantics cannot diverge), then ONE ``mapInPandas`` pass that
-      slices and hashes grams in native Python — ``hashlib.md5`` on the
-      UTF-8 gram reproduces the JVM/DuckDB ``md5`` byte-for-byte, and
-      ``int(hexdigest[:15], 16)`` IS :func:`md5_int`.  Replaces the
-      interpreted sequence→slice→concat_ws→md5 HOF chain that made the
-      first cut of duplicate_spans ~10× slower than the rest of the
-      dedup family (same lesson as shingle_frame / repetition_score).
-    - expression form: posexplode over the Catalyst gram array.
+    JVM normalization/tokenization (string semantics cannot diverge),
+    then ONE ``mapInPandas`` pass that slices and hashes grams in native
+    Python — ``hashlib.md5`` on the UTF-8 gram reproduces the
+    JVM/DuckDB ``md5`` byte-for-byte, and ``int(hexdigest[:15], 16)`` IS
+    :func:`md5_int`.  The interpreted sequence→slice→concat_ws→md5 HOF
+    chain made the first cut of duplicate_spans ~10× slower than the
+    rest of the dedup family (same lesson as shingle_frame /
+    repetition_score).
 
     Documents shorter than k tokens emit their whole text as the single
     gram at pos 1 (mirroring :func:`shingles`); NULL text folds to the
@@ -1698,33 +1594,12 @@ def positional_gram_hashes(
         tok_expr = tokens_adaptive(normalize_unicode(F.col(text_col)))
     else:
         tok_expr = tokens(normalize(F.col(text_col)))
-    if not vectorized:
-        from kafka_merge_purge_spark.plans.introspect import let_once
-
-        def _grams(toks_c):
-            # let-bound (r16): the position lambda would otherwise
-            # re-tokenize per element (see shingles())
-            return F.transform(
-                F.sequence(
-                    F.lit(1), F.greatest(F.size(toks_c) - (k - 1), F.lit(1))
-                ),
-                lambda i: F.concat_ws(" ", F.slice(toks_c, i, k)),
-            )
-
-        grams = let_once(tok_expr, _grams)
-        return df.select(
-            F.col(id_col).alias("id"), F.posexplode(grams).alias("pos0", "gram")
-        ).select(
-            "id", (F.col("pos0") + 1).alias("pos"), md5_int(F.col("gram")).alias("h")
-        )
-
     import hashlib
     from collections.abc import Iterator
 
     import pandas as pd
 
     id_type = dict(df.dtypes)[id_col]
-    toks_c = tok_expr
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         md5 = hashlib.md5
@@ -1741,7 +1616,7 @@ def positional_gram_hashes(
             if ids:
                 yield pd.DataFrame({"id": ids, "pos": poss, "h": hs})
 
-    return df.select(F.col(id_col).alias("id"), toks_c.alias("_toks")).mapInPandas(
+    return df.select(F.col(id_col).alias("id"), tok_expr.alias("_toks")).mapInPandas(
         gen, schema=f"id {id_type}, pos int, h long"
     )
 

@@ -142,45 +142,18 @@ def pq_encode(
     codebooks: list[list[list[float]]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "pandas",
 ) -> DataFrame:
     """Encode each vector as its per-subspace nearest sub-centroid
     (0-based codes, first-argmin ties) — the m-byte compressed form.
-    Zero shuffle either way; two physical forms (the _tag_cells
-    precedent, pinned equivalent in pytest):
-
-    - ``pandas`` (default): one Arrow-batched numpy pass — per batch
-      and subspace a (batch × ksub) distance matrix + argmin.  At the
-      default m·ksub = 16·32 geometry the expression twin's literal
-      tree is ~16k nodes: it breaks whole-stage codegen's 64 KB method
-      limit and its per-execution compile cost alone dominated the
-      first cut (encode measured 5.9 s for 5 k rows, ~all planning);
-    - ``expr``: the literal :func:`cluster._assign_expr` argmin per
-      subspace — Catalyst-only environments, small books.
+    Zero shuffle: one Arrow-batched numpy pass — per batch and subspace
+    a (batch × ksub) distance matrix + argmin.  A literal-expression
+    argmin per subspace (:func:`cluster._assign_expr`) would be a
+    ~16k-node tree at the default m·ksub = 16·32 geometry: it breaks
+    whole-stage codegen's 64 KB method limit, and its per-execution
+    compile cost alone dominated the first cut (encode measured 5.9 s
+    for 5 k rows, ~all planning).
 
     Output: (id_col, codes array<int>)."""
-    if impl not in ("pandas", "expr"):
-        # a typo ('exprs') must not silently pick the pandas path
-        raise ValueError(
-            f"pq_encode: impl must be 'pandas' or 'expr', got {impl!r}"
-        )
-    base = drop_null_vectors(emb, vec_col)
-    if impl == "expr":
-        from kafka_merge_purge_spark.operators.cluster import _assign_expr
-
-        m = len(codebooks)
-        dsub = len(codebooks[0][0])
-        v = F.col(vec_col).cast("array<double>")
-        codes = F.array(
-            *[
-                (
-                    _assign_expr(F.slice(v, j * dsub + 1, dsub), codebooks[j]) - 1
-                ).cast("int")
-                for j in range(m)
-            ]
-        )
-        return base.select(F.col(id_col), codes.alias("codes"))
-
     import numpy as np
     import pandas as pd
     from collections.abc import Iterator
@@ -204,7 +177,7 @@ def pq_encode(
                 {id_col: pdf[id_col], "codes": list(np.stack(cols, axis=1))}
             )
 
-    return base.select(id_col, vec_col).mapInPandas(
+    return drop_null_vectors(emb, vec_col).select(id_col, vec_col).mapInPandas(
         encode, schema=f"{id_col} {id_type}, codes array<int>"
     )
 
@@ -217,7 +190,7 @@ def _query_lut_frame(
 ) -> DataFrame:
     """Per-query ADC state as ONE Arrow kernel pass over the (tiny)
     query side: (query_id, _qv raw vector, _qn norm, _lut) with
-    lut[j][c] = <q_subj, codebook[j][c]>.  A literal-expression twin of
+    lut[j][c] = <q_subj, codebook[j][c]>.  A literal-expression form of
     the LUT is d·ksub multiply-add nodes (~16k at the default
     geometry): it breaks the 64 KB codegen method limit and its
     compile cost alone measured 11.7 s for 20 query rows — the kernel

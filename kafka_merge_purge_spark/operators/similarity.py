@@ -663,46 +663,21 @@ def ivf_topk(
     return _ivf_score_topk(corpus_assigned, query_probes, k)
 
 
-def _cell_dots(cents: list[list[float]], vname: str):
-    cent_lit = F.array(*[F.array(*[F.lit(x) for x in c]) for c in cents])
-    return F.transform(cent_lit, lambda ce: dot(F.col(vname), ce))
-
-
 def _tag_cells(
     corpus: DataFrame,
     cents: list[list[float]],
     id_col: str,
     vec_col: str,
-    impl: str = "pandas",
 ) -> DataFrame:
     """Cell-tagged corpus (neighbor_id, cv, cn, cell_id) — a NARROW
-    projection either way (zero shuffle between scan and tagged corpus);
-    two physical forms with the same assignment semantics (argmax dot,
-    first-max → lowest cell id):
-
-    - ``pandas`` (default): one Arrow-batched ``(batch × dim) @ (dim ×
-      cells)`` numpy GEMM per batch.  At real IVF scale (thousands of
-      cells × high dim) this is the only sane form — the expression
-      twin's literal tree grows as cells × dim and its compile cost is
-      paid per execution (measured: the 16×64 literal tree alone adds
-      ~1s of driver planning per run at ANY data size).
-    - ``expr``: centroids inlined as a literal array, per-row dots via
-      ``transform`` + argmax via ``array_position(dots,
-      array_max(dots))`` — keeps the whole plan in Catalyst for
-      environments where Python workers are undesirable; pinned
-      equivalent to the pandas form in pytest."""
-    if impl == "expr":
-        dots_c = _cell_dots(cents, "cv")
-        return corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("cv"),
-        ).select(
-            "neighbor_id",
-            "cv",
-            l2_norm(F.col("cv")).alias("cn"),
-            F.array_position(dots_c, F.array_max(dots_c)).cast("int").alias("cell_id"),
-        )
-
+    projection (zero shuffle between scan and tagged corpus): one
+    Arrow-batched ``(batch × dim) @ (dim × cells)`` numpy GEMM per batch,
+    argmax dot with first-max → lowest cell id.  At real IVF scale
+    (thousands of cells × high dim) this is the only sane form — a
+    literal-centroid expression tree grows as cells × dim and its
+    compile cost is paid per execution (measured: the 16×64 literal
+    tree alone added ~1s of driver planning per run at ANY data
+    size)."""
     import numpy as np
     import pandas as pd
     from collections.abc import Iterator
@@ -718,8 +693,7 @@ def _tag_cells(
                 continue
             mat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
             dots = mat @ C.T
-            # np.argmax returns the FIRST max — the same lowest-cell-id
-            # tie-break as array_position(dots, array_max(dots))
+            # np.argmax returns the FIRST max: lowest cell id on ties
             cell = dots.argmax(axis=1).astype(np.int32) + 1
             cn = np.sqrt((mat * mat).sum(axis=1))
             yield pd.DataFrame(
@@ -744,44 +718,19 @@ def _probe_cells(
     nprobe: int,
     id_col: str,
     vec_col: str,
-    impl: str = "pandas",
     payload: bool = True,
 ) -> DataFrame:
     """Per-query probe rows (query_id, qv, qn, cell_id), one row per
-    probed cell; ties resolve dot desc, cell_id asc.  Narrow map in both
-    forms — ``pandas`` (default) ranks cells with a stable numpy argsort
-    on a GEMM, ``expr`` sorts (−dot, cell_id) structs inside ONE array
-    expression (same compile-cost trade as ``_tag_cells``).
+    probed cell; ties resolve dot desc, cell_id asc.  Narrow map: a
+    stable numpy argsort on a GEMM ranks the cells (same compile-cost
+    reason as ``_tag_cells``).
 
     ``payload=False`` emits ``(query_id, cell_id)`` ONLY — for callers
     like the dedup candidate generator that never score inside the
-    probe frame.  This must be explicit on the pandas path: Catalyst
-    column pruning cannot reach inside a mapInPandas output schema, so
-    a downstream ``.select(id, cell)`` would still pay ~nprobe×dim
-    doubles of vector serialization per row (r6 review)."""
-    if impl == "expr":
-        dots_q = _cell_dots(cents, "qv")
-        ranked = F.slice(
-            F.array_sort(
-                F.zip_with(
-                    dots_q,
-                    F.sequence(F.lit(1), F.lit(len(cents))),
-                    lambda d, i: F.struct((-d).alias("neg_dot"), i.alias("cell_id")),
-                )
-            ),
-            1,
-            nprobe,
-        )
-        return queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("qv"),
-        ).select(
-            "query_id",
-            "qv",
-            l2_norm(F.col("qv")).alias("qn"),
-            F.explode(F.transform(ranked, lambda s: s["cell_id"])).alias("cell_id"),
-        )
-
+    probe frame.  This must be explicit: Catalyst column pruning cannot
+    reach inside a mapInPandas output schema, so a downstream
+    ``.select(id, cell)`` would still pay ~nprobe×dim doubles of vector
+    serialization per row (r6 review)."""
     import numpy as np
     import pandas as pd
     from collections.abc import Iterator
@@ -798,8 +747,7 @@ def _probe_cells(
                 continue
             mat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
             dots = mat @ C.T
-            # stable argsort on -dot: ties keep index order = cell_id asc,
-            # matching the expression form's (−dot, cell_id) struct sort
+            # stable argsort on -dot: ties keep index order = cell_id asc
             top = np.argsort(-dots, axis=1, kind="stable")[:, :n_probe] + 1
             out = {"query_id": pdf[id_col].to_numpy().repeat(n_probe)}
             if payload:

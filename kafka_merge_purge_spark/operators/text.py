@@ -366,50 +366,22 @@ def repetition_score(
     text_col: str = "text",
     id_col: str = "doc_id",
     k: int = 3,
-    vectorized: bool = True,
 ) -> DataFrame:
     """Within-document repetition ratio: 1 - distinct/total k-gram count
     — the standard repetition filter for generated/boilerplate text
     (high ratio = the same phrases loop).  Documents shorter than k
     tokens score 0 by construction (single whole-text gram).
 
-    Two physical forms, bit-identical results:
-
-    - vectorized (default): normalization + tokenization stay JVM
-      expressions (so string semantics cannot diverge), then ONE
-      ``mapInPandas`` pass builds grams and counts distincts per row —
-      replacing the interpreted sequence→slice→concat_ws HOF chain
-      (O(n·k) expression interpretation per row, the suite's #3 cost at
-      sf0.1) with native Python slicing over Arrow token arrays.  The
-      ratio round stays a Spark expression, so rounding is the engine's.
-    - expression form: everything in Catalyst for environments where
-      Python workers are undesirable."""
+    Normalization + tokenization stay JVM expressions (so string
+    semantics cannot diverge), then ONE ``mapInPandas`` pass builds
+    grams and counts distincts per row — native Python slicing over
+    Arrow token arrays in place of the interpreted
+    sequence→slice→concat_ws HOF chain (O(n·k) expression interpretation
+    per row, the suite's #3 cost at sf0.1).  The ratio round stays a
+    Spark expression, so rounding is the engine's."""
     from kafka_merge_purge_spark.operators.dedup import normalize
 
     toks = tokens(normalize(F.col(text_col)))
-    if not vectorized:
-        from kafka_merge_purge_spark.plans.introspect import let_once
-
-        # let-bound (r16): the position lambda re-evaluates captured
-        # subexpressions per element — unbound, each gram re-tokenized
-        # the document (see dedup.shingles for the measured A/B)
-        grams = let_once(
-            toks,
-            lambda t: F.transform(
-                F.sequence(
-                    F.lit(1), F.greatest(F.size(t) - (k - 1), F.lit(1))
-                ),
-                lambda i: F.concat_ws(" ", F.slice(t, i, k)),
-            ),
-        )
-        total = F.size(grams)
-        uniq = F.size(F.array_distinct(grams))
-        return df.select(
-            F.col(id_col),
-            total.alias("n_grams"),
-            uniq.alias("n_distinct_grams"),
-            F.round(F.lit(1.0) - uniq / total, 6).alias("repetition"),
-        )
 
     import pandas as pd
     from collections.abc import Iterator
@@ -418,9 +390,8 @@ def repetition_score(
         for pdf in batches:
             ng, nd = [], []
             for tk in pdf["_toks"]:
-                # NULL text → NULL token array: the expression form's
-                # slice(NULL)→concat_ws chain folds to one empty gram —
-                # an empty token list reproduces that exactly
+                # NULL text → NULL token array: one empty gram, as the
+                # slice(NULL)→concat_ws chain of dedup.shingles folds it
                 tk = [] if tk is None else list(tk)
                 m = max(len(tk) - (k - 1), 1)
                 grams = [" ".join(tk[i : i + k]) for i in range(m)]
@@ -1294,131 +1265,70 @@ def char_entropy(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    impl: str = "kernel",
 ) -> DataFrame:
     """Per-document Shannon character entropy (bits/char) — the cheap
     gibberish/boilerplate quality signal curation pipelines run next to
     the Gopher rules: natural prose sits ~4 bits, single-char spam near
     0, uniform random base36 near log2(36) ≈ 5.17.
 
-    Engine-portable determinism: the per-character counts are exact
-    integers (``size(filter(...))`` over the codepoint array), the
-    entropy terms fold in SORTED distinct-character order on both
-    engines (Spark ``aggregate`` over the sorted distinct list; DuckDB
-    ``list_reduce`` over a char-ordered list), so the float sum
+    ONE stateless Arrow pass computes each document's exact ``(n, k,
+    Σ c·ln(c))`` in-process — counts per codepoint, terms accumulated in
+    sorted-codepoint order with plain IEEE doubles — and the final
+    ``(ln n − acc/n)/ln 2`` + round STAY Spark expressions (JVM libm,
+    the quality_classifier kernel pattern).  Engine-portable
+    determinism: the counts are exact integers and the DuckDB oracle
+    folds the same terms in the same sorted distinct-character order
+    (``list_reduce`` over a char-ordered list), so the float sum
     sequence — and therefore the rounded value — is identical, and the
-    result hash-matches the SQL oracle.
+    result hash-matches the SQL oracle.  An interpreted HOF fold over
+    the sorted character array took 23.7 s at 10× scale, against the
+    kernel's 2.3 s.
 
-    Scale shape: zero shuffles on either physical form — the right
-    100 TB posture for a per-doc score.  Documents with NULL/empty
-    text drop (the tier's degenerate-filter convention).
+    Sort-order note: Python ``sorted`` == DuckDB ``list_sort`` for the
+    BMP; astral-plane corpora should pin their own ordering before
+    trusting cross-engine hashes.
 
-    ``impl`` picks the physical form (identical values, pinned equal):
-
-    - ``"kernel"`` (default): ONE stateless Arrow pass computes each
-      document's exact ``(n, k, Σ c·ln(c))`` in-process — counts per
-      codepoint, terms accumulated in sorted-codepoint order with
-      plain IEEE doubles — and the final ``(ln n − acc/n)/ln 2`` +
-      round STAY Spark expressions (JVM libm, the quality_classifier
-      kernel pattern, so the oracle's float path is untouched).  The
-      HOF fold below is interpreted, not codegen'd: the kernel is ~10×
-      faster at 10× scale (23.7 → 2.3 s).
-    - ``"agg"``: pure JVM expression — split, sort, ONE O(L)
-      run-length ``aggregate`` fold over the sorted codepoint array
-      (each run is one distinct char, so the fold adds the same
-      ``c·ln(c)`` terms, in the same sorted order, as the oracle's
-      per-distinct-char list).  Kept as the kernel's equality pin.
-      (A first draft counted each distinct char with
-      ``size(filter(...))`` — O(k·L); the fold is ~2.6× faster.)
-
-    Sort-order note: terms accumulate in codepoint order on every
-    path (Python ``sorted`` == Spark binary string order == DuckDB
-    ``list_sort`` for the BMP; astral-plane corpora should pin their
-    own ordering before trusting cross-engine hashes).
+    Scale shape: zero shuffles — the right 100 TB posture for a per-doc
+    score.  Documents with NULL/empty text drop (the tier's
+    degenerate-filter convention).
 
     Output: (id_col, n_chars, n_distinct_chars, entropy_bits)."""
+    import math
+    from collections import Counter
+
+    import pandas as pd
+
     base = df.filter(F.col(text_col).isNotNull() & (F.length(text_col) > 0))
-    ln2 = float(__import__("math").log(2.0))
-    if impl == "kernel":
-        import math
-        from collections import Counter
+    id_type = df.schema[id_col].dataType.simpleString()
 
-        import pandas as pd
+    def stats(batches):
+        for pdf in batches:
+            ids, ns, ks, accs = [], [], [], []
+            for i, t in zip(pdf[id_col], pdf[text_col]):
+                if t is None or len(t) == 0:
+                    continue
+                counts = Counter(t)
+                acc = 0.0
+                for ch in sorted(counts):
+                    c = float(counts[ch])
+                    acc += c * math.log(c)
+                ids.append(i)
+                ns.append(len(t))
+                ks.append(len(counts))
+                accs.append(acc)
+            if ids:
+                yield pd.DataFrame({id_col: ids, "_n": ns, "_k": ks, "_a": accs})
 
-        id_type = df.schema[id_col].dataType.simpleString()
-
-        def stats(batches):
-            for pdf in batches:
-                ids, ns, ks, accs = [], [], [], []
-                for i, t in zip(pdf[id_col], pdf[text_col]):
-                    if t is None or len(t) == 0:
-                        continue
-                    counts = Counter(t)
-                    acc = 0.0
-                    for ch in sorted(counts):
-                        c = float(counts[ch])
-                        acc += c * math.log(c)
-                    ids.append(i)
-                    ns.append(len(t))
-                    ks.append(len(counts))
-                    accs.append(acc)
-                if ids:
-                    yield pd.DataFrame(
-                        {id_col: ids, "_n": ns, "_k": ks, "_a": accs}
-                    )
-
-        st = base.select(id_col, text_col).mapInPandas(
-            stats, schema=f"{id_col} {id_type}, _n long, _k int, _a double"
-        )
-        nn = F.col("_n")
-        ent_k = (F.log(nn.cast("double")) - F.col("_a") / nn.cast("double")) / F.lit(ln2)
-        return st.select(
-            id_col,
-            nn.alias("n_chars"),
-            F.col("_k").alias("n_distinct_chars"),
-            F.round(ent_k, 6).alias("entropy_bits"),
-        )
-    if impl != "agg":
-        raise ValueError(f"char_entropy: impl must be 'kernel' or 'agg', got {impl!r}")
-    cs = F.array_sort(F.split(F.col(text_col), ""))
-    n = F.size(cs)
-    # one pass: state (prev char, current run length, Σ c·ln(c), #runs)
-    state0 = F.struct(
-        F.lit("").alias("p"),
-        F.lit(0).cast("long").alias("r"),
-        F.lit(0.0).alias("a"),
-        F.lit(0).cast("int").alias("k"),
+    st = base.select(id_col, text_col).mapInPandas(
+        stats, schema=f"{id_col} {id_type}, _n long, _k int, _a double"
     )
-
-    def step(s, ch):
-        same = s["p"] == ch
-        run = s["r"].cast("double")
-        return F.struct(
-            ch.alias("p"),
-            F.when(same, s["r"] + 1).otherwise(F.lit(1).cast("long")).alias("r"),
-            F.when(same, s["a"])
-            .otherwise(s["a"] + F.when(s["r"] > 0, run * F.log(run)).otherwise(F.lit(0.0)))
-            .alias("a"),
-            (s["k"] + F.when(same, F.lit(0)).otherwise(F.lit(1))).alias("k"),
-        )
-
-    def fin(s):
-        run = s["r"].cast("double")
-        return F.struct(
-            (s["a"] + F.when(s["r"] > 0, run * F.log(run)).otherwise(F.lit(0.0))).alias("a"),
-            s["k"].alias("k"),
-        )
-
-    folded = F.aggregate(cs, state0, step, fin)
-    ent = (F.log(n.cast("double")) - folded["a"] / n.cast("double")) / F.lit(ln2)
-    return (
-        base
-        .select(
-            id_col,
-            n.alias("n_chars"),
-            folded["k"].alias("n_distinct_chars"),
-            F.round(ent, 6).alias("entropy_bits"),
-        )
+    nn = F.col("_n").cast("double")
+    ent = (F.log(nn) - F.col("_a") / nn) / F.lit(math.log(2.0))
+    return st.select(
+        id_col,
+        F.col("_n").alias("n_chars"),
+        F.col("_k").alias("n_distinct_chars"),
+        F.round(ent, 6).alias("entropy_bits"),
     )
 
 
@@ -1709,7 +1619,7 @@ def textrank_keywords(
         raise ValueError(
             f"textrank_keywords: min_cooccur must be >= 1, got {min_cooccur}"
         )
-    from kafka_merge_purge_spark.plans.introspect import projection_barrier
+    from kafka_merge_purge_spark.plans.introspect import projection_barrier, spread_width
 
     stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
     toks_expr = F.filter(
@@ -1745,7 +1655,7 @@ def textrank_keywords(
     # pair explosion is CPU-bound per row — spread the corpus over the
     # cluster first or a small parquet pins the stage to its few input
     # splits (the dsir_select lesson: 2 of 32 cores otherwise)
-    n_part = max(df.sparkSession.sparkContext.defaultParallelism, 8)
+    n_part = spread_width(df.sparkSession)
     und = (
         projection_barrier(
             df.filter(F.col(text_col).isNotNull())
@@ -1824,7 +1734,7 @@ def textrank_keywords_per_doc(
         raise ValueError(
             f"textrank_keywords_per_doc: min_cooccur must be >= 1, got {min_cooccur}"
         )
-    from kafka_merge_purge_spark.plans.introspect import projection_barrier
+    from kafka_merge_purge_spark.plans.introspect import projection_barrier, spread_width
 
     stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
     toks_expr = F.filter(
@@ -1855,7 +1765,7 @@ def textrank_keywords_per_doc(
         ).otherwise(F.array().cast("array<struct<w1:string,w2:string>>"))
         for off in range(1, window + 1)
     ]
-    n_part = max(df.sparkSession.sparkContext.defaultParallelism, 8)
+    n_part = spread_width(df.sparkSession)
     und = (
         projection_barrier(
             df.filter(F.col(text_col).isNotNull() & F.col(id_col).isNotNull())

@@ -62,6 +62,14 @@ def wholestage_codegen_count(df: DataFrame) -> int:
     return len(set(re.findall(r"WholeStageCodegen \((\d+)\)", formatted_plan(df))))
 
 
+def spread_width(spark) -> int:
+    """Partition count for spreading a CPU-bound map stage over the
+    cluster before it runs: the default parallelism, never below 8.  A
+    small corpus arrives as one file, so without the spread its few
+    input splits pin the whole stage to a handful of tasks."""
+    return max(spark.sparkContext.defaultParallelism, 8)
+
+
 def let_once(value, body):
     """Expression-level let-binding: evaluate ``value`` ONCE per row and
     pass it to ``body`` as a bound lambda variable.

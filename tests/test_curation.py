@@ -294,13 +294,25 @@ def test_duplicate_spans_exact_verify_kills_hash_collisions(spark, monkeypatch):
 
 
 def test_positional_gram_kernel_matches_expression_twin(spark):
+    """(id, pos, h) equals 1-based positional 5-grams of the normalized
+    token stream hashed as int(md5(gram)[:15], 16), built in Python with
+    ``re`` normalization; short docs emit their whole text at pos 1."""
+    import hashlib
+    import re
+
     from kafka_merge_purge_spark.operators.dedup import positional_gram_hashes
     from kafka_merge_purge_spark.sources.batch import load_table
 
     docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    a = sorted(map(tuple, positional_gram_hashes(docs, vectorized=True).collect()))
-    b = sorted(map(tuple, positional_gram_hashes(docs, vectorized=False).collect()))
-    assert a == b and len(a) > 0
+    got = sorted(map(tuple, positional_gram_hashes(docs).collect()))
+    want = []
+    for r in docs.collect():
+        t = r["text"] or ""
+        toks = re.sub("[^a-z0-9]+", " ", t.lower()).strip().split(" ")
+        for p in range(max(len(toks) - 4, 1)):
+            g = " ".join(toks[p:p + 5])
+            want.append((r["doc_id"], p + 1, int(hashlib.md5(g.encode()).hexdigest()[:15], 16)))
+    assert got == sorted(want) and len(got) > 0
 
 
 def test_scrub_removes_exactly_the_shared_passage(spark):
@@ -920,12 +932,35 @@ def test_llm_pipeline_composes_and_plan_bounded(spark):
         before += gr[d]
 
 
+def _quality_reference(df, weights, bias):
+    """quality_classifier replayed from the ``hashed_embedding`` feature
+    frame: per doc Σ weight·q[bucket] in exact int64 over 1e-6-quantized
+    weights, plus the quantized bias, then the margin/sigmoid rounding."""
+    import math
+
+    from kafka_merge_purge_spark.operators.text import hashed_embedding
+
+    qw = [int(math.floor(w * 1e6 + 0.5)) for w in weights]
+    bias_q = int(math.floor(bias * 1e6 + 0.5))
+    wcol = F.element_at(
+        F.array(*[F.lit(q).cast("long") for q in qw]),
+        F.col("bucket").cast("int") + 1,
+    )
+    margin = (F.sum(F.col("weight") * wcol) + F.lit(bias_q)).cast("double") / 1e6
+    feats = hashed_embedding(df, dim=len(weights))
+    return feats.groupBy("doc_id").agg(F.round(margin, 6).alias("margin")).select(
+        "doc_id",
+        "margin",
+        F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-F.col("margin"))), 6).alias("prob"),
+    )
+
+
 def test_quality_classifier_kernel_equals_agg(spark):
-    """r9: the zero-shuffle kernel form must equal the explode+aggregate
-    form row for row (same md5→bucket→±sign arithmetic, same quantized
-    dot, same margin/sigmoid expressions) — including degenerate docs
-    (no alphanumerics → no row), NULL text, and punctuation-heavy
-    normalization edges."""
+    """r9: the zero-shuffle kernel must equal the explode+aggregate
+    replay over ``hashed_embedding`` row for row (same md5→bucket→±sign
+    arithmetic, same quantized dot, same margin/sigmoid expressions) —
+    including degenerate docs (no alphanumerics → no row), NULL text,
+    and punctuation-heavy normalization edges."""
     from kafka_merge_purge_spark.operators.curation import quality_classifier
 
     rows = [
@@ -939,21 +974,17 @@ def test_quality_classifier_kernel_equals_agg(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     w = [((j * 37) % 13 - 6) / 10.0 for j in range(64)]
     kern = {tuple(r) for r in quality_classifier(df, w, 0.1).collect()}
-    agg = {tuple(r) for r in quality_classifier(df, w, 0.1, impl="agg").collect()}
-    assert kern == agg and len(kern) == 4
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="impl"):
-        quality_classifier(df, w, impl="svm")
+    ref = {tuple(r) for r in _quality_reference(df, w, 0.1).collect()}
+    assert kern == ref and len(kern) == 4
 
 
 def test_quality_classifier_kernel_matches_agg_non_ascii(spark):
-    """r9 ADVICE (low): the kernel's Python str.lower() vs the agg
-    form's JVM lower().  Spark 4's UTF8_BINARY lower implements the
-    locale-invariant Unicode default mapping — same as Python — so the
-    two physical forms must agree bit-for-bit on the notorious cases
-    too: dotted-İ (→ i + combining dot, squeezed to 'i '), KELVIN K,
-    final sigma, titlecase ǅ, ﬁ-ligature, ĳ, sharp-ß."""
+    """r9 ADVICE (low): the kernel's Python str.lower() vs the JVM
+    lower() the ``hashed_embedding`` features use.  Spark 4's
+    UTF8_BINARY lower implements the locale-invariant Unicode default
+    mapping — same as Python — so the two must agree bit-for-bit on the
+    notorious cases too: dotted-İ (→ i + combining dot, squeezed to
+    'i '), KELVIN K, final sigma, titlecase ǅ, ﬁ-ligature, ĳ, sharp-ß."""
     from kafka_merge_purge_spark.operators.curation import quality_classifier
 
     docs = spark.createDataFrame(
@@ -971,10 +1002,8 @@ def test_quality_classifier_kernel_matches_agg_non_ascii(spark):
     kern = sorted(
         map(tuple, quality_classifier(docs, weights, bias=0.1).collect())
     )
-    agg = sorted(
-        map(tuple, quality_classifier(docs, weights, bias=0.1, impl="agg").collect())
-    )
-    assert kern == agg and len(kern) == 6
+    ref = sorted(map(tuple, _quality_reference(docs, weights, 0.1).collect()))
+    assert kern == ref and len(kern) == 6
 
 
 def test_llm_pipeline_defaults_to_real_text_no_synth_pii(spark):

@@ -78,6 +78,31 @@ def test_minhash_agrees_with_exact_jaccard(tables):
         assert len(lsh) >= len(exact) * 0.8
 
 
+def _py_tokens(text):
+    """Python model of ``tokens(normalize(text))``: lowercase, squeeze
+    non-alphanumerics to one space, trim, split on spaces."""
+    import re
+
+    return re.sub("[^a-z0-9]+", " ", text.lower()).strip().split(" ")
+
+
+def _py_md5_int(s):
+    import hashlib
+
+    return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
+
+
+def _py_simhash(text, bits=32):
+    """Majority vote over the distinct tokens' 60-bit md5 hashes; NULL
+    text fingerprints to 0."""
+    if text is None:
+        return 0
+    hs = [_py_md5_int(t) for t in dict.fromkeys(_py_tokens(text))]
+    return sum(
+        1 << j for j in range(bits) if 2 * sum((h >> j) & 1 for h in hs) >= len(hs)
+    )
+
+
 def test_simhash_near_for_similar_docs(spark):
     df = spark.createDataFrame(
         [(1, "alpha beta gamma delta epsilon zeta"),
@@ -88,9 +113,7 @@ def test_simhash_near_for_similar_docs(spark):
     fps = {r["doc_id"]: r["simhash"] for r in dd.simhash(df).collect()}
     ham = lambda a, b: bin(a ^ b).count("1")  # noqa: E731
     assert ham(fps[1], fps[2]) < ham(fps[1], fps[3])
-    # the codegen expression form is the same function, bit for bit
-    expr = {r["doc_id"]: r["simhash"] for r in dd.simhash(df, vectorized=False).collect()}
-    assert expr == fps
+    assert fps == {r["doc_id"]: _py_simhash(r["text"]) for r in df.collect()}
 
 
 def test_brute_force_topk_selfexcluded_and_ranked(tables):
@@ -804,21 +827,19 @@ def test_fuzzy_dedup_banding_recall_is_exhaustive(tables):
 
 
 def test_simhash_null_and_empty_text_match_expression_form(spark):
-    # NULL text: vectorized vote must yield the expression form's 0, not
-    # crash in np.asarray(None)
+    # NULL text must fingerprint to 0, not crash in np.asarray(None)
     df = spark.createDataFrame(
         [(1, None), (2, ""), (3, "alpha beta gamma")], "doc_id long, text string"
     )
     vec = {r["doc_id"]: r["simhash"] for r in dd.simhash(df).collect()}
-    expr = {r["doc_id"]: r["simhash"] for r in dd.simhash(df, vectorized=False).collect()}
-    assert vec == expr
+    assert vec == {r["doc_id"]: _py_simhash(r["text"]) for r in df.collect()}
     assert vec[1] == 0
 
 
 def test_repetition_vectorized_matches_expression_form(spark):
-    """Both physical forms of repetition_score are bit-identical,
-    including NULL/empty/short-text edges (the NULL token array must fold
-    to one empty gram exactly like the expression chain does)."""
+    """repetition_score equals a Python k-gram count, including
+    NULL/empty/short-text edges (NULL text folds to one empty gram, as
+    the shingles() expression chain does)."""
     from kafka_merge_purge_spark.operators.text import repetition_score
 
     df = spark.createDataFrame(
@@ -832,9 +853,15 @@ def test_repetition_vectorized_matches_expression_form(spark):
         ],
         "doc_id long, text string",
     )
-    expr = {tuple(r) for r in repetition_score(df, vectorized=False).collect()}
-    vec = {tuple(r) for r in repetition_score(df, vectorized=True).collect()}
-    assert expr == vec and len(vec) == 6
+    got = {r["doc_id"]: tuple(r)[1:] for r in repetition_score(df).collect()}
+    want = {}
+    for r in df.collect():
+        toks = _py_tokens(r["text"]) if r["text"] is not None else []
+        grams = [" ".join(toks[i:i + 3]) for i in range(max(len(toks) - 2, 1))]
+        want[r["doc_id"]] = (len(grams), len(set(grams)), 1 - len(set(grams)) / len(grams))
+    assert got.keys() == want.keys() and len(got) == 6
+    for i, (n, d, rep) in got.items():
+        assert (n, d) == want[i][:2] and abs(rep - want[i][2]) <= 1e-6
 
 
 def test_ppm_synth_parse_roundtrip():
@@ -1024,25 +1051,41 @@ def test_simhash_hamming_pairs_exact_recall(spark):
 
 
 def test_minhash_banding_vectorized_matches_expression_form(tables):
-    """Both physical forms of the LSH banding emit identical candidate
-    pairs (numpy int64 reproduces the JVM affine arithmetic exactly and
-    str-join equals concat_ws), at both the default and the fuzzy-dedup
+    """The LSH banding kernel emits exactly the verified pairs that the
+    public ``shingles()`` / ``minhash_signature_from_shingles()``
+    columns give when banded in Python (numpy int64 reproduces the JVM
+    affine arithmetic exactly), at both the default and the fuzzy-dedup
     hash configurations."""
+    import itertools
+
     docs = tables["documents"].limit(300)
+    content = docs.filter(F.col("text").rlike("[a-zA-Z0-9]"))
     for nh, nb in ((16, 4), (24, 8)):
-        expr = {
-            tuple(r)
+        got = {
+            (r["id_a"], r["id_b"]): r["jaccard"]
             for r in dd.minhash_lsh_pairs(
-                docs, num_hashes=nh, bands=nb, jaccard_threshold=0.5, vectorized=False
+                docs, num_hashes=nh, bands=nb, jaccard_threshold=0.5
             ).collect()
         }
-        vec = {
-            tuple(r)
-            for r in dd.minhash_lsh_pairs(
-                docs, num_hashes=nh, bands=nb, jaccard_threshold=0.5, vectorized=True
-            ).collect()
-        }
-        assert expr == vec and len(vec) > 0
+        sh = F.col("sh")
+        ref = content.select("doc_id", dd.shingles(F.col("text")).alias("sh")).select(
+            "doc_id", sh, dd.minhash_signature_from_shingles(sh, nh).alias("sig")
+        ).collect()
+        rows = nh // nb
+        buckets = {}
+        for r in ref:
+            for b in range(nb):
+                key = (b, tuple(r["sig"][b * rows:(b + 1) * rows]))
+                buckets.setdefault(key, []).append(r["doc_id"])
+        sets = {r["doc_id"]: set(r["sh"]) for r in ref}
+        want = {}
+        for ids in buckets.values():
+            for a, b in itertools.combinations(sorted(ids), 2):
+                j = len(sets[a] & sets[b]) / len(sets[a] | sets[b])
+                if round(j, 6) >= 0.5:
+                    want[(a, b)] = j
+        assert got.keys() == want.keys() and len(got) > 0
+        assert all(abs(got[p] - want[p]) <= 1e-6 for p in got)
 
 
 def test_ngram_contamination_screen(spark):
@@ -1150,7 +1193,7 @@ def test_pack_sequences_two_level_prefix_matches_naive(spark, tables):
 
 
 def test_shingle_frame_vectorized_matches_expression(spark):
-    """Both physical forms of the shingle stage produce identical arrays
+    """The shingle kernel produces the ``shingles()`` column's arrays
     (set AND first-occurrence order), incl. NULL / empty / short docs."""
     df = spark.createDataFrame(
         [
@@ -1163,8 +1206,9 @@ def test_shingle_frame_vectorized_matches_expression(spark):
         "doc_id long, text string",
     )
     vec = {r["id"]: r["sh"] for r in dd.shingle_frame(df).collect()}
-    expr = {r["id"]: r["sh"] for r in dd.shingle_frame(df, vectorized=False).collect()}
-    assert vec == expr
+    col = {r["doc_id"]: r["sh"]
+           for r in df.select("doc_id", dd.shingles(F.col("text")).alias("sh")).collect()}
+    assert vec == col
     assert vec[4] == [""] and vec[3] == [""]  # NULL/empty fold like the HOF chain
     assert vec[2] == ["a b"]  # shorter than k -> whole-text shingle
 
@@ -1315,24 +1359,34 @@ def test_ivf_topk_precomputed_centroids_identical(tables):
 
 
 def test_ivf_tag_and_probe_forms_agree(tables):
-    """The pandas (GEMM) and expression (literal-array) physical forms
-    of IVF cell tagging and probing produce identical assignments — the
-    pandas form exists because the literal tree's compile cost grows
-    with cells × dim and is paid per execution (r6: it was the real
-    x_similarity_ivf regression, not the data)."""
+    """IVF cell tagging is the argmax dot over the centroids (lowest cell
+    id on ties) and probing takes the ``nprobe`` best cells ordered by
+    (dot desc, cell id asc) — checked against a driver-side numpy
+    reference on the real corpus (1-based cell ids)."""
+    import numpy as np
+
     emb = tables["embeddings"]
     probes = emb.filter(F.col("vec_id") < 10)
     cents = sim._kmeans_cells(emb, 8)
-    te = sorted(map(tuple, sim._tag_cells(emb, cents, "vec_id", "embedding", impl="expr")
-                    .select("neighbor_id", "cell_id").collect()))
-    tp = sorted(map(tuple, sim._tag_cells(emb, cents, "vec_id", "embedding", impl="pandas")
-                    .select("neighbor_id", "cell_id").collect()))
-    assert te == tp and len(te) > 0
-    pe = sorted(map(tuple, sim._probe_cells(probes, cents, 3, "vec_id", "embedding", impl="expr")
-                    .select("query_id", "cell_id").collect()))
-    pp = sorted(map(tuple, sim._probe_cells(probes, cents, 3, "vec_id", "embedding", impl="pandas")
-                    .select("query_id", "cell_id").collect()))
-    assert pe == pp and len(pe) > 0
+    C = np.asarray(cents, dtype=np.float64)
+    dots = {
+        r["vec_id"]: C @ np.asarray(r["embedding"], dtype=np.float64)
+        for r in emb.collect()
+        if r["embedding"] is not None
+    }
+    tagged = sorted(map(tuple, sim._tag_cells(emb, cents, "vec_id", "embedding")
+                        .select("neighbor_id", "cell_id").collect()))
+    want_tag = sorted((i, int(d.argmax()) + 1) for i, d in dots.items())
+    assert tagged == want_tag and len(tagged) > 0
+    probed = sorted(map(tuple, sim._probe_cells(probes, cents, 3, "vec_id", "embedding")
+                        .select("query_id", "cell_id").collect()))
+    want_probe = sorted(
+        (i, c + 1)
+        for i, d in dots.items()
+        if i < 10
+        for c in sorted(range(len(cents)), key=lambda c: (-d[c], c))[:3]
+    )
+    assert probed == want_probe and len(probed) > 0
 
 
 def test_tokens_adaptive_cjk_fallback(spark):
@@ -2392,10 +2446,10 @@ def test_image_ahash_words_wide_path(spark):
 
 
 def test_semantic_dedup_gemm_equals_pairs_strategy(spark):
-    """r9: the default in-cell chunked-GEMM prune must equal the legacy
-    pair-join scorer composition row for row (bit-identical quantized
-    cosine math), including with a sub-chunk and multi-chunk cell, and
-    both must keep the id dtype."""
+    """r9: the in-cell chunked-GEMM prune must equal brute-force in-cell
+    pairs scored by ``score_candidate_pairs`` (bit-identical quantized
+    cosine math): a row is pruned iff some lower-id row of its cell
+    scores ``cos >= threshold`` against it.  The id dtype is kept."""
     import random
 
     rng = random.Random(77)
@@ -2406,12 +2460,21 @@ def test_semantic_dedup_gemm_equals_pairs_strategy(spark):
         if i % 7 == 0:
             rows.append((i + 10000, [x + rng.gauss(0, 0.001) for x in v]))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    kw = dict(threshold=0.9, k=3, iters=2)
-    gemm = {tuple(r) for r in dd.semantic_dedup(df, strategy="gemm", **kw).collect()}
-    pairs = {tuple(r) for r in dd.semantic_dedup(df, strategy="pairs", **kw).collect()}
-    assert gemm == pairs and any(r[2] == 0 for r in gemm)
-    with pytest.raises(ValueError, match="strategy"):
-        dd.semantic_dedup(df, strategy="quadratic")
+    out = dd.semantic_dedup(df, threshold=0.9, k=3, iters=2)
+    assert dict(out.dtypes)["vec_id"] == "bigint"
+    got = {tuple(r) for r in out.collect()}
+    cells = spark.createDataFrame(
+        [(i, c) for i, c, _ in got], "vec_id long, cell_id int"
+    )
+    cand = (
+        cells.select(F.col("vec_id").alias("id_a"), "cell_id")
+        .join(cells.select(F.col("vec_id").alias("id_b"), "cell_id"), "cell_id")
+        .filter(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b")
+    )
+    dropped = {r["id_b"] for r in dd.score_candidate_pairs(cand, df, threshold=0.9).collect()}
+    want = {(i, c, 0 if i in dropped else 1) for i, c, _ in got}
+    assert got == want and dropped and len(got) == len(rows)
 
 
 def test_multimodal_dedup_matches_reference_union_find(spark):
@@ -2924,7 +2987,7 @@ def test_set_similarity_pairs_generic_sets(spark):
         [(k, sorted(set(v))) for k, v in sets.items() if v],
         "id long, sh array<string>",
     )
-    keys = _banded_minhash_keys(sh, 24, 8, True).collect()
+    keys = _banded_minhash_keys(sh, 24, 8).collect()
     by_id = {}
     for r in keys:
         by_id.setdefault(r["id"], set()).add((r["band"], r["band_key"]))
@@ -3128,22 +3191,28 @@ def test_containment_pairs_exact_vs_bruteforce(spark):
 
 
 def test_char_entropy_kernel_matches_agg(spark, tables):
-    """The Arrow kernel (default) equals the JVM expression form
-    bit-for-bit on the real corpus + crafted edge docs (runs of one
-    char, full-range distinct, multibyte)."""
-    docs = tables["documents"]
-    a = sorted(map(tuple, tx.char_entropy(docs).collect()))
-    b = sorted(map(tuple, tx.char_entropy(docs, impl="agg").collect()))
-    assert a == b and a
+    """char_entropy equals a Counter-based Shannon entropy computed in
+    Python on the real corpus + crafted edge docs (runs of one char,
+    full-range distinct, multibyte); NULL/empty text drops."""
+    import math
+    from collections import Counter
+
+    def ref(i, t):
+        c = Counter(t)
+        h = -sum(v / len(t) * math.log2(v / len(t)) for v in c.values())
+        return i, len(t), len(c), h
+
     edge = spark.createDataFrame(
-        [(1, "aaaabbbbccccdddd"), (2, "zyxw vut"), (3, "αβγ αβ α"), (4, "a" * 500)],
+        [(1, "aaaabbbbccccdddd"), (2, "zyxw vut"), (3, "αβγ αβ α"), (4, "a" * 500),
+         (5, ""), (6, None)],
         "doc_id long, text string",
     )
-    ka = sorted(map(tuple, tx.char_entropy(edge).collect()))
-    ag = sorted(map(tuple, tx.char_entropy(edge, impl="agg").collect()))
-    assert ka == ag
-    with pytest.raises(ValueError):
-        tx.char_entropy(edge, impl="nope")
+    for df in (tables["documents"], edge):
+        got = sorted(map(tuple, tx.char_entropy(df).collect()))
+        want = sorted(ref(r["doc_id"], r["text"]) for r in df.collect() if r["text"])
+        assert [g[:3] for g in got] == [w[:3] for w in want] and got
+        assert all(abs(g[3] - w[3]) <= 2e-6 for g, w in zip(got, want))
+    assert {r["doc_id"] for r in tx.char_entropy(edge).collect()} == {1, 2, 3, 4}
 
 
 def test_label_propagation_matches_reference(spark):
@@ -3348,13 +3417,24 @@ def test_pq_fit_encode_and_recall_floor(spark):
     books2 = pq_fit(small, m=8, ksub=4, iters=1)
     assert len(books2) == 8 and pq_encode(small, books2).count() == 40
 
-    # Arrow kernel == expression twin (the _tag_cells pin): identical
-    # codes row-for-row on the real corpus
+    # codes == a numpy nearest-sub-centroid reference (squared distance,
+    # first argmin) row-for-row on the real corpus
+    import numpy as np
+
     kern = sorted((r["vec_id"], tuple(r["codes"]))
                   for r in pq_encode(emb, books2).collect())
-    expr = sorted((r["vec_id"], tuple(r["codes"]))
-                  for r in pq_encode(emb, books2, impl="expr").collect())
-    assert kern == expr
+    vecs = [(r["vec_id"], np.asarray(r["embedding"], dtype=np.float64))
+            for r in emb.collect() if r["embedding"] is not None]
+    dsub = len(books2[0][0])
+    ref = sorted(
+        (i, tuple(
+            int(((v[j * dsub:(j + 1) * dsub] - np.asarray(cb)) ** 2)
+                .sum(axis=1).argmin())
+            for j, cb in enumerate(books2)
+        ))
+        for i, v in vecs
+    )
+    assert kern == ref and len(kern) == len(vecs)
 
     with _pytest.raises(ValueError):
         pq_fit_sample(emb, m=7)  # 64 dims don't split into 7
@@ -4195,8 +4275,9 @@ def test_node2vec_walks_bias_and_determinism(spark):
     behaviorally: a huge return weight (p ≪ 1) makes every walk
     oscillate t↔v from step 2 on; a huge near weight (q ≫ 1 posture)
     keeps walks inside the previous node's neighborhood; paths are real
-    edges, deterministic across runs, sink-safe, and the all-1 default
-    matches a driver-side replay of the weighted-cumsum spec."""
+    edges, deterministic across runs, sink-safe, and both the all-1
+    default and a mixed (3, 5, 2) weighting match a driver-side replay
+    of the weighted-cumsum spec."""
     from kafka_merge_purge_spark.operators.components import node2vec_walks
 
     # triangle a-b-c plus a pendant d off b, symmetrized
@@ -4245,7 +4326,8 @@ def test_node2vec_walks_bias_and_determinism(spark):
     assert out["s#0"] == ["s"]
     assert out["a#0"] == ["a", "b", "s"]
 
-    # all-1 default equals a driver-side replay of the spec
+    # the all-1 default and a mixed (3, 5, 2) weighting each equal a
+    # driver-side replay of the weighted-cumsum spec
     import hashlib
 
     adj = {}
@@ -4255,39 +4337,39 @@ def test_node2vec_walks_bias_and_determinism(spark):
     def coin(wid, step, cur):
         return int(hashlib.md5(f"n2v:{wid}:{step}:{cur}".encode()).hexdigest()[:15], 16)
 
-    expect = {}
-    for node in sorted({u for u, _ in eset} | {v for _, v in eset}):
-        wid, prev, cur, path = f"{node}#0", None, node, [node]
-        for i in range(4):
-            cands = adj.get(cur, [])
-            if not cands:
-                break
-            ws = [1] * len(cands)  # all-1: every branch weighs 1
-            tot = sum(ws)
-            c = coin(wid, i, cur) % tot
-            acc = 0
-            for x, w in zip(cands, ws):
-                acc += w
-                if c < acc:
-                    prev, cur = cur, x
-                    path.append(x)
-                    break
-        expect[wid] = path
-    got = {r["walk_id"]: r["path"]
-           for r in node2vec_walks(df, walk_length=4).collect()}
-    assert got == expect
+    def weight(prev, x, w_return, w_near, w_far):
+        if prev is None:
+            return 1  # first step is uniform
+        if x == prev:
+            return w_return
+        return w_near if (prev, x) in eset else w_far
 
-    # the Arrow-kernel pick (default) and the Catalyst expression twin
-    # compute identical walks (the pq_encode pinned-twin convention)
-    expr_twin = {r["walk_id"]: r["path"]
-                 for r in node2vec_walks(
-                     df, walk_length=4, w_return=3, w_near=5, w_far=2,
-                     impl="expr").collect()}
-    pandas_form = {r["walk_id"]: r["path"]
-                   for r in node2vec_walks(
-                       df, walk_length=4, w_return=3, w_near=5, w_far=2,
-                       impl="pandas").collect()}
-    assert expr_twin == pandas_form
+    def replay(w_return, w_near, w_far):
+        expect = {}
+        for node in sorted({u for u, _ in eset} | {v for _, v in eset}):
+            wid, prev, cur, path = f"{node}#0", None, node, [node]
+            for i in range(4):
+                cands = adj.get(cur, [])
+                if not cands:
+                    break
+                ws = [weight(prev, x, w_return, w_near, w_far) for x in cands]
+                c = coin(wid, i, cur) % sum(ws)
+                acc = 0
+                for x, w in zip(cands, ws):
+                    acc += w
+                    if c < acc:
+                        prev, cur = cur, x
+                        path.append(x)
+                        break
+            expect[wid] = path
+        return expect
+
+    for w in ((1, 1, 1), (3, 5, 2)):
+        got = {r["walk_id"]: r["path"]
+               for r in node2vec_walks(
+                   df, walk_length=4, w_return=w[0], w_near=w[1], w_far=w[2]
+               ).collect()}
+        assert got == replay(*w), w
 
     import pytest as _pytest
 
@@ -4295,8 +4377,6 @@ def test_node2vec_walks_bias_and_determinism(spark):
         node2vec_walks(df, w_return=0)
     with _pytest.raises(ValueError):
         node2vec_walks(df, walks_per_node=0)
-    with _pytest.raises(ValueError):
-        node2vec_walks(df, impl="exprs")
 
 
 def test_skipgram_pairs_exact_and_bounds(spark):

@@ -962,7 +962,7 @@ def test_banded_signature_stream_bit_parity(spark):
     want = {
         (r["id"], r["band"], r["band_key"])
         for r in _banded_minhash_keys(
-            shingle_frame(docs, "text", "doc_id", 3), 16, 4, True
+            shingle_frame(docs, "text", "doc_id", 3), 16, 4
         ).collect()
     }
     assert got and got == want

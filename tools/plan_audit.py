@@ -61,7 +61,7 @@ ROUND_HEADLINERS = {
     "x_kcore": "per-round DELTA peel (r15, Matula-Beck decrement form) — victims (deg<k) join the cached adjacency ONCE and their neighbors' degrees decrement (deg_new = deg_old - edges-to-victims; decrements toward dead nodes discard in the survivor left join); per-round shuffle O(victim edges), TOTAL O(|E|) across all rounds vs the r14 full re-screen's O(rounds*|E|); convergence flag = one 1-row victim count; state (node, deg), shrinking monotonically; results round-identical to the recompute form (hash unchanged)",
     "x_hits": "per-round double power step — the two edge-join score aggregates are the only real shuffles; L1 normalization sums ride 1-row broadcast cross-joins; in-round localCheckpoints stop the 2-4x re-evaluation of twice-referenced aggregates",
     "x_walks": "per-step uniform walk (r15 grouped form) — ONE inner equi join of the O(walks) state onto the materialized one-row-per-node sorted neighbor-array adjacency; the pick is a single element_at on the matched row, sinks retire AT ARRIVAL via the precomputed _vdead flag (the r14 per-round LeftAnti sink screen is gone); the md5 coin is expression-level (no RNG, no Python)",
-    "x_node2vec": "per-step biased walk — the O(walks) state joins the cached per-node neighbor-ID array frame (cur + prev, int64); the md5 coin is EXPRESSION-LEVEL (rides the plan, r13) and the weighted pick runs CROSS-ROW vectorized in ONE Arrow kernel (flat segment numpy: concatenate/repeat/reduceat + one global searchsorted — no per-row Python loop); one id-to-node join materializes the pick — nothing per-candidate ever shuffles (the candidate-join form OOMed then ran 334 s at the 10x bench; the expression-fold twin survives as impl='expr', pinned equal)",
+    "x_node2vec": "per-step biased walk — the O(walks) state joins the cached per-node neighbor-ID array frame (cur + prev, int64); the md5 coin is EXPRESSION-LEVEL (rides the plan, r13) and the weighted pick runs CROSS-ROW vectorized in ONE Arrow kernel (flat segment numpy: concatenate/repeat/reduceat + one global searchsorted — no per-row Python loop); one id-to-node join materializes the pick — nothing per-candidate ever shuffles (the candidate-join form OOMed then ran 334 s at the 10x bench)",
     "x_louvain": "per-round mutual-best merge over the CONTRACTED community multigraph (r15 — true Louvain aggregation): the corpus edge list is touched once at build (one (src,dst) aggregate, materialized); each round's decision chain (sig/pair aggregates, best/mutual self-join) reads the contracted ce leaf, the matched labels remap INTO ce (two small left joins + re-aggregate, materialized), and the per-node label state takes one remap left join — every round's work is bounded by surviving community pairs, never |E| (the r14 form re-joined the full edge list twice per round); integer weight sums make contraction byte-identical to relabel-then-aggregate, so the hash is unchanged",
     "x_betweenness": "per-round BFS-with-sigma (r14) — the captured round is the forward front expansion: ONE equi join of the dist==i front onto the cached src-partitioned edges + one (node,lsrc) sum-aggregate + a left_anti freshness screen; the backward Brandes sweep mirrors it with a (dst,lsrc) join; state = reached (node,lsrc) pairs only",
     "q_scc_pregel": "SCC outer round, phase 1 (trim) — the captured round is the source/sink peel: two survivor semi-screens of the checkpointed live edge set + a semi-join intersection of src/dst endpoint sets, convergence = two 1-row count aggs; the forward color phase keeps its pointer-jump, the in-color-backward phase is ONE-HOP only (r13: the jump's leaf-with-own-projection broadcast join measured a 2.6x-per-round driver-side blowup as labels converge — 293 s -> 22 s at sf0.1 after removal, hashes unchanged), all O(nodes) state",
