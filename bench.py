@@ -101,7 +101,7 @@ def main() -> None:
             # INSIDE the timed region would be fairer still, but the
             # unpersist cost is driver-side microseconds; keeping it
             # out preserves comparability with prior rounds
-            from kafka_merge_purge_spark.operators.dedup import release_all_persisted
+            from kafka_merge_purge_spark.operators.iterate import release_all_persisted
 
             release_all_persisted()
         runs[name] = per_run

@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kafka_merge_purge_spark.operators.iterate import cached, materialize
+
 #: edge-count bound for the driver union-find fast path.  1M edges ≈
 #: 16 MB as two Arrow int64 columns and <1 s of path-compressed
 #: union-find — the same bounded-collect posture as
@@ -214,9 +216,9 @@ def connected_components(
 
     bi = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     bi = bi.unionByName(bi.select(F.col("v").alias("u"), F.col("u").alias("v"))).cache()
-    labels0 = (
+    labels0 = materialize(
         bi.select(F.col("u").alias("node")).distinct().withColumn("lbl", F.col("node"))
-    ).localCheckpoint(eager=True)
+    )
     # the Pregel path only fires past the union-find bound, so the label
     # frame CAN be huge — the same auto-sized exchange as the rest of
     # the iterative family (probe on the already-materialized frame)
@@ -374,30 +376,27 @@ def strongly_connected_components(
         if probe.num_rows <= max_driver_edges:
             return _driver_tarjan(e.sparkSession, probe, out_type)
 
-    live = e.filter(F.col("u") != F.col("v")).distinct().localCheckpoint(
-        eager=True
-    )
+    live = materialize(e.filter(F.col("u") != F.col("v")).distinct())
     hint = _state_hint(nodes_all, broadcast_state, known_rows=n_nodes)
     decided = [
         # isolated / self-loop-only nodes never enter the live graph
-        nodes_all.join(
-            live.select(F.col("u").alias("node"))
-            .unionByName(live.select(F.col("v").alias("node")))
-            .distinct(),
-            "node",
-            "left_anti",
+        materialize(
+            nodes_all.join(
+                live.select(F.col("u").alias("node"))
+                .unionByName(live.select(F.col("v").alias("node")))
+                .distinct(),
+                "node",
+                "left_anti",
+            ).select("node", F.col("node").alias("scc"))
         )
-        .select("node", F.col("node").alias("scc"))
-        .localCheckpoint(eager=True)
     ]
     for _outer in range(max_outer):
         if live.isEmpty():
             break
-        pre = (
+        pre = materialize(
             live.select(F.col("u").alias("node"))
             .unionByName(live.select(F.col("v").alias("node")))
             .distinct()
-            .localCheckpoint(eager=True)
         )
 
         def trim_round(nodes: DataFrame, _i: int) -> DataFrame:
@@ -418,17 +417,16 @@ def strongly_connected_components(
         core = iterate(pre, trim_round, max_rounds=max_inner,
                        coalesce_to=_iter_coalesce(hint))
         decided.append(
-            pre.join(core, "node", "left_anti")
-            .select("node", F.col("node").alias("scc"))
-            .localCheckpoint(eager=True)
+            materialize(
+                pre.join(core, "node", "left_anti").select("node", F.col("node").alias("scc"))
+            )
         )
         if core.isEmpty():
-            live = live.filter(F.lit(False)).localCheckpoint(eager=True)
+            live = materialize(live.filter(F.lit(False)))
             break
-        ee = (
+        ee = materialize(
             live.join(hint(core.withColumnRenamed("node", "u")), "u", "left_semi")
             .join(hint(core.withColumnRenamed("node", "v")), "v", "left_semi")
-            .localCheckpoint(eager=True)
         )
 
         def fwd_round(st: DataFrame, _i: int) -> DataFrame:
@@ -567,10 +565,9 @@ def strongly_connected_components(
             )
         )
         undec = flags.filter(F.col("g") != F.col("lbl")).select("node")
-        live = (
+        live = materialize(
             ee.join(hint(undec.withColumnRenamed("node", "u")), "u", "left_semi")
             .join(hint(undec.withColumnRenamed("node", "v")), "v", "left_semi")
-            .localCheckpoint(eager=True)
         )
         if undec.isEmpty():
             break
@@ -883,11 +880,8 @@ def pagerank_grouped(
     elif impl == "auto":
         # probe the worst group ONCE on the cached frame (the kernel's
         # groupBy re-reads the cache, so the probe's scan is the only
-        # extra pass; registry-drained per the r13 cache-leak rule)
-        from kafka_merge_purge_spark.operators.dedup import _register_persisted
-
-        base = base.cache()
-        _register_persisted([base])
+        # extra pass)
+        base = cached(base)
         worst = (
             base.groupBy("_g")
             .agg(F.count(F.lit(1)).alias("_ne"))
@@ -912,10 +906,9 @@ def pagerank_grouped(
     # group sizes are loop-invariant — materialize once instead of
     # re-aggregating the node frame in every power round (r14 bench:
     # one grouped count × iterations saved)
-    n_g = (
+    n_g = materialize(
         nodes.groupBy("_g")
         .agg(F.count(F.lit(1)).alias("_n"))
-        .localCheckpoint(eager=True)
     )
     outdeg = (
         e.groupBy("_g", F.col("_src").alias("node"))
@@ -1196,18 +1189,17 @@ def hits(
         # aggregates re-evaluate 2-4× per round (measured 13.8 → ~5 s
         # at sf0.1).  The materialized frames are O(nodes), executor-
         # local; iterate() still truncates the returned state.
-        a_raw = (
+        a_raw = materialize(
             e.join(
                 hint(state.select(F.col("node").alias("_src"), "hub")), "_src"
             )
             .groupBy(F.col("_dst").alias("node"))
             .agg(F.sum("hub").alias("_ar"))
-            .localCheckpoint(eager=True)
         )
         a_sum = F.broadcast(
             a_raw.agg(F.coalesce(F.sum("_ar"), F.lit(0)).cast("long").alias("_as"))
         )
-        with_a = (
+        with_a = materialize(
             state.join(hint(a_raw), "node", "left")
             .crossJoin(a_sum)
             .select(
@@ -1220,9 +1212,8 @@ def hits(
                 .otherwise(F.col("authority"))
                 .alias("authority"),
             )
-            .localCheckpoint(eager=True)
         )
-        h_raw = (
+        h_raw = materialize(
             e.join(
                 hint(
                     with_a.select(F.col("node").alias("_dst"), "authority")
@@ -1231,7 +1222,6 @@ def hits(
             )
             .groupBy(F.col("_src").alias("node"))
             .agg(F.sum("authority").alias("_hr"))
-            .localCheckpoint(eager=True)
         )
         h_sum = F.broadcast(
             h_raw.agg(F.coalesce(F.sum("_hr"), F.lit(0)).cast("long").alias("_hs"))
@@ -1480,11 +1470,6 @@ def k_core(
             "node", "deg", (F.col("_nv") > 0).alias("_changed")
         )
 
-    # checkpoint_every=2 was A/B-measured in r15 and REJECTED: 6.96 ->
-    # 15.05 s at sf0.1 — the step references its state twice (victims +
-    # survivors), so each skipped materialization re-evaluates the
-    # previous round's whole plan in both branches, costing far more
-    # than the materialization it saves.  Keep per-round truncation.
     out = iterate(state0, peel, max_rounds=rounds,
                   coalesce_to=_iter_coalesce(hint))
     result = out.select("node", F.col("deg").alias("degree"))
@@ -1562,7 +1547,13 @@ def random_walks(
     # out at ~10⁷ neighbors per node, ~100 MB a row, the same bound
     # the collect_list-based LPA/Louvain neighborhoods already carry).
     dist = e.distinct()
-    adj = (
+    # materialize, NOT cache: the one-time _vdead build join must
+    # not ride into every per-round step plan (a cached-but-lazy
+    # frame keeps its full lineage in the plan — the r15 plan pin
+    # caught the build-time SortMergeJoin inside the broadcast-regime
+    # round plan); the materialized leaf also means the per-round
+    # plans the optimizer re-plans stay O(1) in size
+    adj = materialize(
         dist.join(
             # no broadcast hint: AQE converts to a broadcast join at
             # runtime when the src set is small; a billion-node src set
@@ -1579,13 +1570,6 @@ def random_walks(
                 )
             ).alias("_nbrs")
         )
-        # localCheckpoint, NOT cache: the one-time _vdead build join must
-        # not ride into every per-round step plan (a cached-but-lazy
-        # frame keeps its full lineage in the plan — the r15 plan pin
-        # caught the build-time SortMergeJoin inside the broadcast-regime
-        # round plan); the materialized leaf also means the per-round
-        # plans the optimizer re-plans stay O(1) in size
-        .localCheckpoint(eager=True)
     )
     # nodes derive from the CACHED adj, not from e: the probe, starts
     # and srcs frames all scan nodes, and deriving them from e re-ran
@@ -1907,7 +1891,7 @@ def node2vec_walks(
     # materialization each pulled the full subtree.  localCheckpoint,
     # not cache(), for the same reason as random_walks' grouped
     # adjacency (r15): the downstream build joins must see a leaf.
-    de = e.distinct().localCheckpoint(eager=True)
+    de = materialize(e.distinct())
     nodes = (
         de.select(F.col("_u").alias("node"))
         .unionByName(de.select(F.col("_v").alias("node")))
@@ -2400,17 +2384,8 @@ def skipgram_negatives_tilted(
     # cached: the prefix-bucket probe(s), the bucket-total collect and
     # the final drawn-join plan all read this aggregate — uncached it
     # re-runs the vocab shuffle 3+ times per call (r13 review).  The
-    # returned plan still reads it lazily, so it cannot unpersist here
-    # — register it so release_all_persisted() can drain it (r13
-    # advice: unregistered caches pin executor storage to session end).
-    v = (
-        v.withColumn("_wt", _isqrt_adj(_isqrt_adj(cap3 * cap3 * cap3)))
-        .drop("_c")
-        .cache()
-    )
-    from kafka_merge_purge_spark.operators.dedup import _register_persisted
-
-    _register_persisted([v])
+    # returned plan still reads it lazily, so it cannot unpersist here.
+    v = cached(v.withColumn("_wt", _isqrt_adj(_isqrt_adj(cap3 * cap3 * cap3))).drop("_c"))
     assign, _, n_vocab = _prefix_bucket_plan(v, F.col("_w"))
     if n_vocab == 0:
         return (
@@ -2680,7 +2655,9 @@ def sgns_training_corpus(
         # instead of re-running the caller's whole upstream graph build
         # (r15 — the second full lineitem⋈orders pass q_sgns_corpus paid)
     if materialize:
-        walks = walks.localCheckpoint(eager=True)
+        from kafka_merge_purge_spark.operators.iterate import materialize as checkpoint
+
+        walks = checkpoint(walks)
     if vocab is None and counts is None:
         vocab = walks.select(
             F.explode(F.col("path")).alias("node")
@@ -2832,12 +2809,8 @@ def modularity(
     # in-keyed); the pair table is bounded by the distinct community
     # pairs actually present (≤ |edges|, typically ≪) and every margin
     # is an exact integer re-sum, so the decomposition is unchanged.
-    # cache + registry (the r13 cache-leak rule), not an eager
-    # checkpoint: the operator stays lazy.
-    from kafka_merge_purge_spark.operators.dedup import _register_persisted
-
-    cc = e.groupBy("_c1", "_c2").agg(F.count(F.lit(1)).alias("_npair")).cache()
-    _register_persisted([cc])
+    # cached, not an eager checkpoint: the operator stays lazy.
+    cc = cached(e.groupBy("_c1", "_c2").agg(F.count(F.lit(1)).alias("_npair")))
     m1 = cc.groupBy().agg(
         F.coalesce(F.sum("_npair"), F.lit(0)).cast("decimal(38,0)").alias("_m")
     )
@@ -2954,14 +2927,13 @@ def louvain(
     # under the identity labeling (labels start as the node ids), then
     # materialize — every later round reads this frame or its
     # successively contracted descendants, never the raw edge list.
-    ce0 = (
+    ce0 = materialize(
         edges.filter(F.col(src).isNotNull() & F.col(dst).isNotNull())
         .select(
             F.col(src).alias("_cs"), F.col(dst).alias("_cd"), w_expr.alias("_w")
         )
         .groupBy("_cs", "_cd")
         .agg(F.sum("_w").alias("_w"))
-        .localCheckpoint(eager=True)
     )
     nodes = (
         ce0.select(F.col("_cs").alias("node"))
@@ -3052,7 +3024,7 @@ def louvain(
         nw = _iter_coalesce(hint)
         if nw is not None:
             remap = remap.coalesce(nw)
-        remap = remap.localCheckpoint(eager=True)
+        remap = materialize(remap)
         # contract the community multigraph by this round's matching so
         # the NEXT round's decision reads the contracted frame — the
         # corpus edge list is never touched again.  SKIPPED (r16, advice)
@@ -3062,7 +3034,7 @@ def louvain(
         # already materialized, so the emptiness probe is a limit-1 scan,
         # far cheaper than the full contraction job it replaces.
         if not last_round and not remap.isEmpty():
-            ce_box["ce"] = (
+            ce_box["ce"] = materialize(
                 cg.join(
                     hint(
                         remap.select(
@@ -3088,7 +3060,6 @@ def louvain(
                 )
                 .groupBy("_cs", "_cd")
                 .agg(F.sum("_w").alias("_w"))
-                .localCheckpoint(eager=True)
             )
         return lab.join(
             hint(remap.withColumnRenamed("_old", "label")), "label", "left"
@@ -3515,9 +3486,9 @@ def betweenness_sample(
         ).select("node", "lsrc", "dist", "sigma")
         return st.unionByName(fresh)
 
-    fwd = iterate(
-        f0, bfs_round, max_rounds=rounds, coalesce_to=_iter_coalesce(hint)
-    ).localCheckpoint(eager=True)
+    fwd = materialize(
+        iterate(f0, bfs_round, max_rounds=rounds, coalesce_to=_iter_coalesce(hint))
+    )
 
     b0 = fwd.withColumn("delta", F.lit(0).cast("long"))
 

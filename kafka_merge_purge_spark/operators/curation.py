@@ -19,6 +19,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .dedup import md5_int
+from .iterate import cached
 from .text import STOPWORDS, tokens
 
 # --------------------------------------------------------------------------
@@ -919,20 +920,13 @@ def dsir_select(
     # persist that bounded frame — both consumers (corpus bucket counts
     # and per-doc scores) read it, so the dominant explode stage runs
     # once instead of twice (r13 review); ≤ docs × min(grams, B) rows,
-    # spilling to disk past memory
-    db = (
+    # spilling to disk past memory.  The returned top-k plan reads db
+    # lazily, so it cannot unpersist here.
+    db = cached(
         _gram_buckets(corpus, B, text_col, id_col)
         .groupBy(id_col, "bucket")
         .agg(F.count(F.lit(1)).alias("_cnt"))
-        .persist()
     )
-    # the returned top-k plan reads db lazily, so it cannot unpersist
-    # here — register it so release_all_persisted() drains it (r13
-    # advice: an unregistered persist pins executor storage to session
-    # end, contrary to the repo's registry convention)
-    from kafka_merge_purge_spark.operators.dedup import _register_persisted
-
-    _register_persisted([db])
     src_b = db.groupBy("bucket").agg(F.sum("_cnt").alias("cs"))
     tgt_b = (
         _gram_buckets(target, B, text_col)

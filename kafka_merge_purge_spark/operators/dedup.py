@@ -28,11 +28,10 @@ shingle sets) are dropped before the join.
 
 from __future__ import annotations
 
-import warnings
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from kafka_merge_purge_spark.operators.iterate import cache_scope, cached
 from kafka_merge_purge_spark.operators.text import tokens
 from kafka_merge_purge_spark.plans.introspect import spread_width
 
@@ -272,7 +271,6 @@ def minhash_lsh_pairs(
     bands: int = DEFAULT_BANDS,
     k: int = 3,
     jaccard_threshold: float = 0.7,
-    persist_shingles: bool = True,
     adaptive: bool = False,
 ) -> DataFrame:
     """Fuzzy-dup candidate pairs via LSH banding, verified with exact
@@ -292,13 +290,11 @@ def minhash_lsh_pairs(
     (scan → normalize → tokenize → shingle) appears three times in the
     plan — once under the banding, once per re-join side — so its CPU
     cost triples versus carrying shingle arrays through the band join.
-    ``persist_shingles=True`` (the measured default, r6 A/B in
-    BENCH_SCALE.md: persist wins 2.3× at sf0.1 and 1.34× at the 10×
-    scale-up, min-of-2 warm on local[32]) materializes the shingle frame
-    once (MEMORY_AND_DISK, LRU-evictable — bounded-safe when the frame
-    outgrows cluster memory) and all three uses read the cache; pass
-    ``False`` to trade CPU for zero cache footprint when executor
-    memory, not compute, is the scarce resource.
+    So the shingle frame is cached once (r6 A/B in BENCH_SCALE.md: the
+    cache wins 2.3× at sf0.1 and 1.34× at the 10× scale-up, min-of-2
+    warm on local[32]; MEMORY_AND_DISK, LRU-evictable — bounded-safe
+    when the frame outgrows cluster memory) and all three uses read it;
+    the cache lives until ``iterate.release_all_persisted()``.
     """
     # Scale posture: small corpora arrive as one file → one partition; the
     # signature map stage must parallelize, so spread rows first (at real
@@ -318,9 +314,7 @@ def minhash_lsh_pairs(
         k,
         adaptive=adaptive,
     )
-    return _banded_jaccard_pairs(
-        sh_df, num_hashes, bands, jaccard_threshold, persist_shingles
-    )
+    return _banded_jaccard_pairs(cached(sh_df), num_hashes, bands, jaccard_threshold)
 
 
 def _banded_jaccard_pairs(
@@ -328,17 +322,13 @@ def _banded_jaccard_pairs(
     num_hashes: int,
     bands: int,
     jaccard_threshold: float,
-    persist_sets: bool,
 ) -> DataFrame:
     """Banded candidates + exact-Jaccard verify over an ``(id, sh)``
     set frame — the LSH tail shared VERBATIM by ``minhash_lsh_pairs``
     (text shingles) and ``set_similarity_pairs`` (any array column), so
     the two fronts cannot drift (the hamming_banded_pairs factoring
-    precedent).  See minhash_lsh_pairs for the plan-shape notes."""
-    if persist_sets:
-        from pyspark import StorageLevel
-
-        sh_df = sh_df.persist(StorageLevel.MEMORY_AND_DISK)
+    precedent).  ``sh_df`` is read three times: callers pass it
+    :func:`cached`.  See minhash_lsh_pairs for the plan-shape notes."""
     # The band frame carries ONLY (id, band, band_key): shingle arrays must
     # not ride the ×bands explode or the self-join shuffle — at 100 TB that
     # would push ~2·bands× the corpus shingle bytes through the network for
@@ -364,17 +354,11 @@ def _banded_jaccard_pairs(
     ).join(sh_df.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     union = F.size(F.array_union("sh_a", "sh_b"))
-    out = (
+    return (
         pairs.withColumn("jaccard", F.round(inter / union, 6))
         .filter(F.col("jaccard") >= jaccard_threshold)
         .select("id_a", "id_b", "jaccard")
     )
-    # record what was cached so callers can release it after materializing
-    # (fuzzy_dedup does; see release_persisted — r6 review: per-call
-    # MEMORY_AND_DISK blocks otherwise accumulate for the context's life)
-    out._kmp_persisted = [sh_df] if persist_sets else []
-    _register_persisted(out._kmp_persisted)
-    return out
 
 
 def set_similarity_pairs(
@@ -384,7 +368,6 @@ def set_similarity_pairs(
     num_hashes: int = DEFAULT_NUM_HASHES,
     bands: int = DEFAULT_BANDS,
     jaccard_threshold: float = 0.5,
-    persist_sets: bool = True,
 ) -> DataFrame:
     """Generic set-similarity join over ANY ``array<string>`` column —
     market baskets, tag sets, feature bags — not just text: the exact
@@ -402,101 +385,8 @@ def set_similarity_pairs(
     ).filter(F.col("sh").isNotNull() & (F.size("sh") > 0))
     n_part = spread_width(df.sparkSession)
     return _banded_jaccard_pairs(
-        sh_df.repartition(n_part, "id"),
-        num_hashes,
-        bands,
-        jaccard_threshold,
-        persist_sets,
+        cached(sh_df.repartition(n_part, "id")), num_hashes, bands, jaccard_threshold
     )
-
-
-#: module-level registry of every shingle/side frame the dedup operators
-#: persisted and nobody has released yet.  ADVICE r6: the per-result
-#: ``_kmp_persisted`` attribute is silently LOST the moment a caller
-#: applies any transformation to the returned frame, and direct callers
-#: of the pair generators (bench/demo entry points) never released at
-#: all — so cache blocks accumulated for the context's lifetime.  The
-#: registry is the sturdier ledger: ``release_all_persisted()`` drains
-#: it after each materialization regardless of what happened to the
-#: result frame.
-#:
-#: ADVICE r8: entries are STRONG references, deliberately.  The r7
-#: weakref form rested on a wrong premise — ``persist()`` registers the
-#: plan in Spark's driver-side CacheManager, which holds its own strong
-#: references, so garbage-collecting the *Python* handle does NOT let
-#: ContextCleaner reclaim a SQL cache; a dead weakref was simply an
-#: unreleasable leak until session end.  A strong handle is the only
-#: thing that guarantees ``release_all_persisted()`` can still
-#: unpersist the cached plan after the caller transformed or discarded
-#: the result frame (the exact scenario the registry exists for).  The
-#: drop-oldest cap below bounds the pin for hosts that never drain.
-_PERSISTED_REGISTRY: list[DataFrame] = []
-
-#: safety cap on registered frames (ADVICE r7 / r7 verdict item):
-#: above this, the OLDEST frame is unpersisted AND forgotten on
-#: registration (drop-oldest) so hosts that persist per ingest batch
-#: and never drain hold a bounded pin by design, not by memory
-#: pressure.  Warned once.  Raised 16 → 64 (r16): a single
-#: sorted-neighborhood/url-dedup query legitimately holds >16 small
-#: cached frames at once (the r15 VERIFY run tripped the warning on
-#: correct code); each registered frame is a bounded candidate/bucket
-#: table, so 64 keeps the pin trivial while the drop-oldest semantics
-#: stay the backstop for genuinely unbounded hosts.
-PERSISTED_REGISTRY_CAP = 64
-_cap_warned = False
-
-
-def _register_persisted(frames: list[DataFrame]) -> None:
-    global _cap_warned
-    _PERSISTED_REGISTRY.extend(frames)
-    # enforce the registered-frame cap (drop-oldest: unpersist AND forget)
-    while len(_PERSISTED_REGISTRY) > PERSISTED_REGISTRY_CAP:
-        oldest = _PERSISTED_REGISTRY.pop(0)
-        if not _cap_warned:
-            _cap_warned = True
-            warnings.warn(
-                "kafka_merge_purge_spark.dedup: more than "
-                f"{PERSISTED_REGISTRY_CAP} operator caches live at once; "
-                "unpersisting the oldest. Call release_all_persisted() "
-                "(or release_persisted(result)) after materializing each "
-                "result to control cache lifetime explicitly.",
-                stacklevel=3,
-            )
-        oldest.unpersist(blocking=False)
-
-
-def release_persisted(df: DataFrame) -> None:
-    """Unpersist the MEMORY_AND_DISK frames an operator cached while
-    building ``df`` (recorded on the frame as ``_kmp_persisted``).
-    Call AFTER the result is materialized (collected, written, or
-    checkpointed) — a long-lived session invoking the persisting
-    operators per ingest batch would otherwise accumulate cache blocks
-    (memory LRU-evicts, but evicted MEMORY_AND_DISK blocks sit on local
-    disk until unpersist or context shutdown).  No-op when ``df``
-    carries no caches."""
-    for f in getattr(df, "_kmp_persisted", []):
-        # blocking: the release must be observable immediately (callers
-        # and tests reason about the persistent-RDD census)
-        f.unpersist(blocking=True)
-        _PERSISTED_REGISTRY[:] = [r for r in _PERSISTED_REGISTRY if r is not f]
-
-
-def release_all_persisted() -> int:
-    """Drain the module registry: unpersist EVERY frame a dedup operator
-    cached and no caller has released — the safety net for hosts that
-    call the pair generators directly (bench harnesses, notebooks,
-    per-ingest-batch services) where the returned frame may have been
-    transformed (dropping ``_kmp_persisted``) or simply discarded.
-    Returns the number of frames released.  Call between units of work,
-    after results are materialized.  The registry's strong handles make
-    this drain unconditional: even a frame whose every caller-side
-    handle is gone is still unpersistable here (CacheManager would
-    otherwise hold the cached plan until session end — ADVICE r8)."""
-    n = 0
-    while _PERSISTED_REGISTRY:
-        _PERSISTED_REGISTRY.pop().unpersist(blocking=True)
-        n += 1
-    return n
 
 
 def fuzzy_dedup(
@@ -507,7 +397,6 @@ def fuzzy_dedup(
     bands: int = 8,
     k: int = 3,
     jaccard_threshold: float = 0.5,
-    persist_shingles: bool = True,
     adaptive: bool = False,
 ) -> DataFrame:
     """End-to-end fuzzy deduplication — the composed flagship pipeline:
@@ -533,23 +422,14 @@ def fuzzy_dedup(
     """
     from kafka_merge_purge_spark.operators.components import connected_components
 
-    pairs = minhash_lsh_pairs(
-        df,
-        text_col,
-        id_col,
-        num_hashes,
-        bands,
-        k,
-        jaccard_threshold,
-        persist_shingles=persist_shingles,
-        adaptive=adaptive,
-    )
-    comps = connected_components(pairs)
-    # connected_components fully materialized the pair graph (driver
+    # connected_components fully materializes the pair graph (driver
     # union-find collect or checkpointed Pregel rounds), so the shingle
-    # cache has served its three uses — release it instead of letting
-    # per-call cache blocks accumulate (r6 review)
-    release_persisted(pairs)
+    # cache has served its three uses when the scope ends (r6 review)
+    with cache_scope():
+        pairs = minhash_lsh_pairs(
+            df, text_col, id_col, num_hashes, bands, k, jaccard_threshold, adaptive=adaptive
+        )
+        comps = connected_components(pairs)
     docs = df.select(F.col(id_col))
     labeled = docs.join(comps, docs[id_col] == comps["node"], "left").select(
         F.col(id_col),
@@ -575,7 +455,6 @@ def minhash_lsh_pairs_against(
     bands: int = DEFAULT_BANDS,
     k: int = 3,
     jaccard_threshold: float = 0.7,
-    persist_shingles: bool = True,
     adaptive: bool = False,
 ) -> DataFrame:
     """Cross-corpus fuzzy-dup candidates: which NEW documents near-match
@@ -591,9 +470,9 @@ def minhash_lsh_pairs_against(
     ingests.  Same shuffle-width rule: band frames carry
     ``(id, band, band_key)`` only, shingles re-join per deduped
     candidate side at 1× width.  Each side's shingle frame appears
-    twice in the plan (banding + re-join), so the same measured default
-    as ``minhash_lsh_pairs`` applies: ``persist_shingles=True`` caches
-    each side once (MEMORY_AND_DISK, LRU-evictable).  ``adaptive=True``
+    twice in the plan (banding + re-join), so, as in
+    ``minhash_lsh_pairs``, each side is cached once (MEMORY_AND_DISK,
+    LRU-evictable).  ``adaptive=True``
     runs the multilingual shingle stage on BOTH sides (r6 review: the
     incremental-ingest form used to keep silently dropping CJK docs
     after the self-join form was fixed).
@@ -602,20 +481,17 @@ def minhash_lsh_pairs_against(
     content_re = r"[\p{L}\p{Nd}]" if adaptive else "[a-zA-Z0-9]"
 
     def prep(df: DataFrame) -> DataFrame:
-        sh = shingle_frame(
-            df.filter(F.col(text_col).rlike(content_re)).repartition(
-                n_part, id_col
-            ),
-            text_col,
-            id_col,
-            k,
-            adaptive=adaptive,
+        return cached(
+            shingle_frame(
+                df.filter(F.col(text_col).rlike(content_re)).repartition(
+                    n_part, id_col
+                ),
+                text_col,
+                id_col,
+                k,
+                adaptive=adaptive,
+            )
         )
-        if persist_shingles:
-            from pyspark import StorageLevel
-
-            sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
-        return sh
 
     sh_new, sh_ref = prep(new_df), prep(ref_df)
     banded_new = _banded_minhash_keys(sh_new, num_hashes, bands)
@@ -636,14 +512,11 @@ def minhash_lsh_pairs_against(
     ).join(sh_ref.select(F.col("id").alias("ref_id"), F.col("sh").alias("sh_b")), "ref_id")
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     union = F.size(F.array_union("sh_a", "sh_b"))
-    out = (
+    return (
         pairs.withColumn("jaccard", F.round(inter / union, 6))
         .filter(F.col("jaccard") >= jaccard_threshold)
         .select("new_id", "ref_id", "jaccard")
     )
-    out._kmp_persisted = [sh_new, sh_ref] if persist_shingles else []
-    _register_persisted(out._kmp_persisted)
-    return out
 
 
 def embedding_fuzzy_dedup(
@@ -703,23 +576,23 @@ def embedding_fuzzy_dedup(
                 "in r7 — pass candidates='exact' to keep the legacy "
                 "full-recall path, or drop these kwargs for the bucketed one)"
             )
-    if candidates == "exact":
-        pairs = embedding_near_dup_pairs(
-            emb, id_col, vec_col, threshold, **near_dup_kwargs
-        )
-    elif candidates in ("lsh", "ivf"):
-        pairs = embedding_ann_pairs(
-            emb, id_col, vec_col, threshold, method=candidates, **near_dup_kwargs
-        )
-    else:
-        raise ValueError(
-            f"embedding_fuzzy_dedup: candidates must be 'exact', 'lsh' or 'ivf', got {candidates!r}"
-        )
-    comps = connected_components(pairs)
     # the pair graph is fully materialized by connected_components, so the
-    # vector cache the bucketed source may have persisted has served its
-    # reads — release it (same lifecycle as fuzzy_dedup's shingle cache)
-    release_persisted(pairs)
+    # vector cache the bucketed source made has served its reads when the
+    # scope ends (same lifecycle as fuzzy_dedup's shingle cache)
+    with cache_scope():
+        if candidates == "exact":
+            pairs = embedding_near_dup_pairs(
+                emb, id_col, vec_col, threshold, **near_dup_kwargs
+            )
+        elif candidates in ("lsh", "ivf"):
+            pairs = embedding_ann_pairs(
+                emb, id_col, vec_col, threshold, method=candidates, **near_dup_kwargs
+            )
+        else:
+            raise ValueError(
+                f"embedding_fuzzy_dedup: candidates must be 'exact', 'lsh' or 'ivf', got {candidates!r}"
+            )
+        comps = connected_components(pairs)
     ids = emb.select(F.col(id_col))
     labeled = ids.join(comps, ids[id_col] == comps["node"], "left").select(
         F.col(id_col),
@@ -1032,15 +905,15 @@ def sorted_neighborhood_pairs(
     in-window pair at or above the threshold — SQL-expressible end to
     end, so the DuckDB oracle hash-checks the whole operator.
     """
-    from pyspark import StorageLevel
     from pyspark.sql import Window
 
     spark = df.sparkSession
     fp = simhash(df.filter(F.col(text_col).rlike("[a-zA-Z0-9]")), text_col, id_col, bits)
     # the fingerprint frame feeds BOTH the bucket-count pass and the
     # ranked frame — cache the 16-byte-wide rows instead of re-running
-    # the md5 vote twice (the persist_shingles A/B trade, same verdict)
-    fp = fp.persist(StorageLevel.MEMORY_AND_DISK)
+    # the md5 vote twice (minhash_lsh_pairs' shingle-cache A/B trade,
+    # same verdict)
+    fp = cached(fp)
     bucket = F.shiftright("simhash", bits - bucket_bits)
     wb = Window.partitionBy("_b").orderBy("simhash", id_col)
     local = fp.withColumn("_b", bucket).withColumn("_lr", F.row_number().over(wb))
@@ -1065,25 +938,19 @@ def sorted_neighborhood_pairs(
     cand = a.join(b, "_nb").filter(
         (F.col("_rb") > F.col("_ra")) & (F.col("_rb") <= F.col("_ra") + window)
     )
-    sh = shingle_frame(
-        df.filter(F.col(text_col).rlike("[a-zA-Z0-9]")), text_col, id_col
-    ).persist(StorageLevel.MEMORY_AND_DISK)  # used by both join sides
+    sh = cached(  # used by both join sides
+        shingle_frame(df.filter(F.col(text_col).rlike("[a-zA-Z0-9]")), text_col, id_col)
+    )
     pairs = cand.join(
         sh.select(F.col("id").alias("_ia"), F.col("sh").alias("sh_a")), "_ia"
     ).join(sh.select(F.col("id").alias("_ib"), F.col("sh").alias("sh_b")), "_ib")
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     union = F.size(F.array_union("sh_a", "sh_b"))
-    out = (
-        pairs.select(
-            F.least("_ia", "_ib").alias("id_a"),
-            F.greatest("_ia", "_ib").alias("id_b"),
-            F.round(inter / union, 6).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= jaccard_threshold)
-    )
-    out._kmp_persisted = [fp, sh]  # release via release_persisted after use
-    _register_persisted(out._kmp_persisted)
-    return out
+    return pairs.select(
+        F.least("_ia", "_ib").alias("id_a"),
+        F.greatest("_ia", "_ib").alias("id_b"),
+        F.round(inter / union, 6).alias("jaccard"),
+    ).filter(F.col("jaccard") >= jaccard_threshold)
 
 
 #: component quantization scale for the exact integer-dot path
@@ -1424,7 +1291,6 @@ def embedding_ann_pairs(
     vec_col: str = "embedding",
     threshold: float = 0.95,
     method: str = "lsh",
-    persist_vectors: bool = True,
     **candidate_kwargs,
 ) -> DataFrame:
     """Bucketed (approximate) embedding near-dup pairs: LSH/IVF
@@ -1441,25 +1307,16 @@ def embedding_ann_pairs(
     are recovered at the recall target — tighter thresholds buy
     sharper (cheaper) buckets automatically.
 
-    ``persist_vectors=True`` (the measured default — r7 A/B in
-    BENCH_SCALE.md) caches the ``(id, vec)`` projection
-    (MEMORY_AND_DISK, registry-tracked like persist_shingles): the
-    frame is read up to four times (auto-parameter count, signature
-    kernel, and the two scorer joins), and when ``emb`` is a DERIVED
-    pipeline (hashed embeddings straight off text) each re-read re-runs
-    the whole upstream.  Pass ``False`` when the input is a cheap
-    columnar scan and executor memory is the scarcer resource."""
+    The ``(id, vec)`` projection is cached (the measured choice — r7
+    A/B in BENCH_SCALE.md; MEMORY_AND_DISK, like minhash_lsh_pairs'
+    shingles): the frame is read up to four times (auto-parameter
+    count, signature kernel, and the two scorer joins), and when
+    ``emb`` is a DERIVED pipeline (hashed embeddings straight off text)
+    each re-read re-runs the whole upstream."""
     candidate_kwargs.setdefault("target_cos", threshold)
-    if persist_vectors:
-        from pyspark import StorageLevel
-
-        emb = emb.select(id_col, vec_col).persist(StorageLevel.MEMORY_AND_DISK)
+    emb = cached(emb.select(id_col, vec_col))
     cand = embedding_candidate_pairs(emb, id_col, vec_col, method, **candidate_kwargs)
-    out = score_candidate_pairs(cand, emb, id_col, vec_col, threshold)
-    if persist_vectors:
-        out._kmp_persisted = [emb]
-        _register_persisted(out._kmp_persisted)
-    return out
+    return score_candidate_pairs(cand, emb, id_col, vec_col, threshold)
 
 
 def semantic_dedup(

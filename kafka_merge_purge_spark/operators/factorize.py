@@ -53,6 +53,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from kafka_merge_purge_spark.operators.iterate import materialize
+
 
 def _rademacher(col, j_col, seed: int):
     """Deterministic ±1 from md5(seed:id:j) — 60 hash bits, parity."""
@@ -172,7 +174,7 @@ def _orth(state: DataFrame, kp: int) -> DataFrame:
     tr = max(np.trace(G), 1e-30)
     L = np.linalg.cholesky(G + np.eye(kp) * (1e-10 * tr / kp))
     r_inv = np.linalg.inv(L.T)
-    return _matmul(state, r_inv).localCheckpoint(eager=True)
+    return materialize(_matmul(state, r_inv))
 
 
 def ppmi_factorize(
@@ -231,7 +233,7 @@ def ppmi_factorize(
         raise ValueError(f"ppmi_factorize: no column {id_src!r} in input")
     if side == "both":
         id_type = "string"
-    rows = (
+    rows = materialize(
         ppmi.filter(
             F.col(center_col).isNotNull()
             & F.col(context_col).isNotNull()
@@ -242,7 +244,6 @@ def ppmi_factorize(
             F.col(context_col).cast("string").alias("_c"),
             F.col(val_col).cast("double").alias("_v"),
         )
-        .localCheckpoint(eager=True)
     )
     spark = ppmi.sparkSession
     schema = f"node {id_type}, embedding array<float>"
@@ -264,7 +265,7 @@ def ppmi_factorize(
             ).alias("vec"),
         )
     )
-    y = _spmm(rows, omega, kp, transpose=False).localCheckpoint(eager=True)
+    y = materialize(_spmm(rows, omega, kp, transpose=False))
     for _ in range(power_iters):
         # one orthonormalization per power round (Halko et al. Alg 4.4
         # re-orthogonalizes once per application of M·Mᵀ; the extra
@@ -284,14 +285,14 @@ def ppmi_factorize(
         ell = np.linalg.cholesky(g + np.eye(kp) * (1e-10 * tr / kp))
         r_inv = np.linalg.inv(ell.T)
         z = _matmul(_spmm(rows, y, kp, transpose=True), r_inv)
-        y = _spmm(rows, z, kp, transpose=False).localCheckpoint(eager=True)
+        y = materialize(_spmm(rows, z, kp, transpose=False))
     q = _orth(y, kp)
     z = _spmm(rows, q, kp, transpose=True)
     if side != "center":
         # z is read twice (Gram + the context-vector finish) — pin it;
         # side="center" reads it once, so the Gram job streams the
         # SpMM directly instead of paying a checkpoint pass (r15)
-        z = z.localCheckpoint(eager=True)
+        z = materialize(z)
     c_small = _gram(z, kp)  # = QᵀM MᵀQ
     lam, u_t = np.linalg.eigh(c_small)
     order = np.argsort(lam)[::-1][:k]
@@ -391,7 +392,7 @@ def graph_embeddings(
                 "graph_embeddings: walk_kind must be 'uniform' or "
                 f"'node2vec', got {walk_kind!r}"
             )
-        walks = walks.localCheckpoint(eager=True)
+        walks = materialize(walks)
     pairs = skipgram_pairs(walks, window=window)
     ppmi = ppmi_from_pairs(pairs, shift=shift)
     return ppmi_factorize(

@@ -11,11 +11,12 @@ the NEXT iterative algorithm (SSSP, HITS, random walks, iterative
 closeness) starts from a correct loop instead of re-learning these:
 
 * **lineage truncation** — the state frame is materialized
-  executor-locally (``localCheckpoint(eager=True)`` — NOT a driver
-  collect, NOT a HDFS checkpoint) every ``checkpoint_every`` rounds, so
-  the optimizer sees a leaf instead of an exponentially growing tree
+  executor-locally (:func:`materialize` — NOT a driver collect, NOT a
+  HDFS checkpoint) every round, so the optimizer sees a leaf instead
+  of an exponentially growing tree
   (measured on label_propagation: 18.0 s → 8.7 s at sf0.1; on pagerank a
-  1.6k-node graph took 14.4 s WITHOUT truncation);
+  1.6k-node graph took 14.4 s WITHOUT truncation; materializing only
+  every other round took k_core from 6.96 to 15.05 s at sf0.1, r15);
 * **in-pass convergence detection** — the step function may attach a
   boolean ``changed_col`` computed inside its own projection (zero extra
   joins/jobs); :func:`iterate` probes it with a ``filter(...).isEmpty()``
@@ -32,15 +33,31 @@ closeness) starts from a correct loop instead of re-learning these:
 limit-1 probe; all data movement is whatever the step itself shuffles.
 The state materialization is executor-local disk/memory, never the
 driver.  ``localCheckpoint`` does mean executor loss forces a
-recompute-from-truncated-lineage failure (Spark re-runs the job); for
-multi-hour loops on preemptible fleets pass
-``checkpoint_dir`` to use resilient ``checkpoint`` instead.
+recompute-from-truncated-lineage failure (Spark re-runs the job).
+
+**Materialization ledger.**  This module is the one place that records
+what an operator materialized past its own return: :func:`cached`
+(a ``MEMORY_AND_DISK`` persist, recorded by handle) and
+:func:`materialize` (a ``localCheckpoint``, recorded by its RDD id only,
+so ContextCleaner can still reclaim a checkpoint nothing references).
+The lifetime rule: a recorded cache or checkpoint lives until
+:func:`release_all_persisted`, which a long-lived host calls between
+units of work, after their results are collected or written.  The
+exceptions free earlier, never later: :func:`iterate` frees each round's
+checkpoint as soon as the next round is checkpointed (the new one is a
+leaf, so nothing reads the old), so one call leaves one checkpoint —
+the state it returns; and :func:`cache_scope` frees the caches made
+inside it when a caller has fully consumed them (fuzzy_dedup's shingle
+cache).  A scoped ``cache()`` … ``unpersist()`` pair inside one
+operator needs no record.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 
+from pyspark import SparkContext, StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -50,28 +67,87 @@ from pyspark.sql import functions as F
 #: regime) — see iterate(coalesce_to=)
 ITER_STATE_PARTITIONS = 4
 
+#: the ledger: frames cached() by handle (CacheManager holds the plan
+#: anyway, so the handle pins nothing extra, and a caller that drops
+#: every handle can still be drained), checkpoints materialize()d by
+#: (context, RDD id) — an int pins nothing
+_CACHED: list[DataFrame] = []
+_CHECKPOINTS: list[tuple[SparkContext, int]] = []
+
+
+def cached(df: DataFrame) -> DataFrame:
+    """Persist ``df`` ``MEMORY_AND_DISK`` and record it in the ledger —
+    for a cache the operator's returned plan still reads lazily, so
+    it cannot be unpersisted before the operator returns."""
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    _CACHED.append(df)
+    return df
+
+
+def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
+    """``df.localCheckpoint(eager)``, recorded in the ledger by the
+    checkpoint RDD's id (the returned frame's plan is a leaf over it)."""
+    df = df.localCheckpoint(eager=eager)
+    _CHECKPOINTS.append((df.sparkSession.sparkContext, df._jdf.logicalPlan().rdd().id()))
+    return df
+
+
+def _free(entry: tuple[SparkContext, int], blocking: bool) -> bool:
+    """Unpersist a recorded checkpoint if its context still holds it."""
+    sc, rdd_id = entry
+    rdd = sc._jsc.getPersistentRDDs().get(rdd_id) if sc._jsc is not None else None
+    if rdd is not None:
+        rdd.unpersist(blocking)
+    return rdd is not None
+
+
+def release_all_persisted() -> int:
+    """Drain the ledger: unpersist every recorded cache, and every
+    recorded checkpoint still persistent (ContextCleaner may already
+    have reclaimed one nothing referenced).  Returns how many were
+    released.  Call between units of work, after their results are
+    collected or written: a frame read afterwards recomputes a freed
+    cache, but a freed checkpoint raises
+    ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``."""
+    n = len(_CACHED)
+    while _CACHED:
+        _CACHED.pop().unpersist(blocking=True)
+    while _CHECKPOINTS:
+        n += _free(_CHECKPOINTS.pop(), blocking=True)
+    return n
+
+
+@contextmanager
+def cache_scope() -> Iterator[None]:
+    """Unpersist, on exit, the frames :func:`cached` inside the block —
+    for a caller that fully consumes a pair generator's output before it
+    returns.  Freeing a cache early is always safe (a later reader
+    recomputes); checkpoints recorded inside stay, since the caller's
+    result may read them."""
+    mark = len(_CACHED)
+    try:
+        yield
+    finally:
+        while len(_CACHED) > mark:
+            _CACHED.pop().unpersist(blocking=True)
+
 
 def iterate(
     state: DataFrame,
     step: Callable[[DataFrame, int], DataFrame],
     max_rounds: int,
     changed_col: str = "_changed",
-    checkpoint_every: int = 1,
-    checkpoint_dir: str | None = None,
     coalesce_to: int | None = None,
 ) -> DataFrame:
     """Run ``state ← step(state, round)`` up to ``max_rounds`` times.
 
     ``step`` takes the current state frame and the 0-based round number
-    and returns the next state.  If the returned frame carries a boolean
-    ``changed_col``, the loop stops early on the first materialized
+    and returns the next state.  Every round is materialized
+    (:func:`materialize`), and the round it replaced is freed; the
+    caller's initial ``state`` is never freed.  If the returned frame
+    carries a boolean ``changed_col``, the loop stops early on the first
     round where no row has it true; the column is stripped from the
-    state between rounds and from the final result.  Convergence is only
-    PROBED on rounds that materialize (every ``checkpoint_every``-th),
-    so with ``checkpoint_every > 1`` the loop can overshoot the fixpoint
-    by up to ``checkpoint_every − 1`` cheap rounds — steps are required
-    to be idempotent at the fixpoint (step(fix) == fix), which every
-    monotone propagation step is.
+    state between rounds and from the final result.
 
     ``coalesce_to``: narrow the state to this many partitions before
     each materialization (plan-only ``coalesce`` — it collapses into
@@ -89,7 +165,7 @@ def iterate(
 
     Returns the final state (without ``changed_col``).  The returned
     frame carries ``_iterate_converged`` (r15): ``True`` iff a
-    materialized-round probe saw ZERO ``changed_col`` rows — i.e. the
+    round's probe saw ZERO ``changed_col`` rows — i.e. the
     loop itself already PROVED ``step(state) == state``, so callers
     that would otherwise run one extra verification round
     (strongly_connected_components' exhaustion guards) can skip it;
@@ -103,40 +179,36 @@ def iterate(
     multigraph advances inside its step) — which in turn means tooling
     MUST NOT invoke ``step`` out-of-band: an extra ``step(state, 0)``
     probe call silently advances such closure state one round ahead.
+    A step must not read an EARLIER round's state than the one it is
+    passed: that round's checkpoint has been freed.
     Plan-capture spies wrap ``step`` and record round 0's RETURN value
     from inside the real loop instead (tools/capture_plans.py).
     """
     if max_rounds < 0:
         raise ValueError(f"iterate: max_rounds must be >= 0, got {max_rounds}")
-    if checkpoint_every < 1:
-        raise ValueError(
-            f"iterate: checkpoint_every must be >= 1, got {checkpoint_every}"
-        )
     if coalesce_to is not None and coalesce_to < 1:
         raise ValueError(
             f"iterate: coalesce_to must be >= 1 or None, got {coalesce_to}"
         )
-    if checkpoint_dir is not None:
-        state.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
-
-    def _materialize(df: DataFrame) -> DataFrame:
-        if checkpoint_dir is not None:
-            return df.checkpoint(eager=True)
-        return df.localCheckpoint(eager=True)
 
     converged = False
+    replaced = None
     for i in range(max_rounds):
         nxt = step(state, i)
         has_flag = changed_col in nxt.columns
-        materializing = ((i + 1) % checkpoint_every == 0) or i == max_rounds - 1
-        if materializing:
-            if coalesce_to is not None:
-                nxt = nxt.coalesce(coalesce_to)
-            nxt = _materialize(nxt)
+        if coalesce_to is not None:
+            nxt = nxt.coalesce(coalesce_to)
+        nxt = materialize(nxt)
+        if replaced is not None:
+            # the new checkpoint is a leaf: nothing reads the one it
+            # replaced any more
+            _CHECKPOINTS.remove(replaced)
+            _free(replaced, blocking=False)
+        replaced = _CHECKPOINTS[-1]
         state = nxt.drop(changed_col) if has_flag else nxt
-        # probe only materialized rounds: the limit-1 isEmpty scan then
-        # reads already-computed partitions instead of re-running the step
-        if has_flag and materializing and nxt.filter(F.col(changed_col)).isEmpty():
+        # the limit-1 isEmpty scan reads the just-materialized partitions
+        # instead of re-running the step
+        if has_flag and nxt.filter(F.col(changed_col)).isEmpty():
             converged = True
             break
     state._iterate_converged = converged

@@ -35,6 +35,8 @@ from typing import Mapping, Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from kafka_merge_purge_spark.operators.iterate import materialize
+
 
 def _margin_expr(
     feature_cols: Sequence[str],
@@ -109,7 +111,7 @@ def logreg_fit(
             F.lit(bucket_mod),
         )
         pts = pts.filter(bucket < F.lit(sample_buckets))
-    pts = pts.localCheckpoint(eager=False)
+    pts = materialize(pts, eager=False)
 
     moments = pts.agg(
         F.count(F.lit(1)).alias("n"),
@@ -215,10 +217,10 @@ def nb_fit(
     # (localCheckpoint, vocab×labels rows — small) and the per-label
     # totals + vocab size derive FROM them — stats/priors otherwise
     # re-tokenize the corpus once per aggregate branch (3-4 scans)
-    cw = (
+    cw = materialize(
         words.groupBy("label", "word")
-        .agg(F.count(F.lit(1)).alias("_c"))
-        .localCheckpoint(eager=False)
+        .agg(F.count(F.lit(1)).alias("_c")),
+        eager=False,
     )
     tw = cw.groupBy("label").agg(F.sum("_c").alias("_t"))
     corpus = cw.agg(F.count_distinct(F.col("word")).alias("_v"))
@@ -295,7 +297,7 @@ def nb_predict(
     # one tokenize pass: the (doc, word) counts materialize once and
     # feed both the stats join and the per-doc totals (two consumers
     # would otherwise re-explode the corpus)
-    toks = (
+    toks = materialize(
         df.filter(F.col(text_col).isNotNull())
         .select(
             F.col(id_col).alias("_id"),
@@ -303,8 +305,8 @@ def nb_predict(
         )
         .filter(F.col("word") != "")
         .groupBy("_id", "word")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .localCheckpoint(eager=False)
+        .agg(F.count(F.lit(1)).alias("_n")),
+        eager=False,
     )
     # counts cast to DECIMAL(12,0) so count×lp stays (31,6) — inside the
     # 38-digit cap, no precision-loss rounding; the product has EXACTLY
@@ -427,7 +429,7 @@ def boosted_stumps_fit(
         .alias("_y"),
         F.lit(0).cast("long").alias("_lw"),  # integer micro-nat log-weight
     )
-    state = state.localCheckpoint(eager=False)
+    state = materialize(state, eager=False)
     n = state.count()
     if n == 0:
         return {"stumps": [], "n": 0}
@@ -513,9 +515,10 @@ def boosted_stumps_fit(
         stumps.append((feat, thr, pol, qa / 1_000_000))
         # h(x) = pol·sign(x_f > thr); lw -= qα·y·h(x)  (integer update)
         h = F.when(F.col(feat) > F.lit(thr), pol).otherwise(-pol)
-        state = state.withColumn(
-            "_lw", F.col("_lw") - F.lit(qa) * F.col("_y") * h
-        ).localCheckpoint(eager=False)
+        state = materialize(
+            state.withColumn("_lw", F.col("_lw") - F.lit(qa) * F.col("_y") * h),
+            eager=False,
+        )
     return {"stumps": stumps, "n": int(n)}
 
 

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from kafka_merge_purge_spark.functions.vectors import dot, l2_norm
+from kafka_merge_purge_spark.operators.iterate import cached
 
 
 def brute_force_topk(
@@ -1119,13 +1120,9 @@ def sparse_cosine_topk(
     # q feeds FOUR consumers (the envelope probe, the norms aggregate,
     # and both sides of the feature self-join) — uncached, each one
     # re-evaluates the caller's entire upstream plan (x_ppmi_topk's
-    # walk→pair→PPMI chain ran 4× per call, r15).  Cache + registry so
-    # release_all_persisted() can drain it (the r13 cache-leak rule);
-    # the returned plan reads it lazily, so it cannot unpersist here.
-    from kafka_merge_purge_spark.operators.dedup import _register_persisted
-
-    q = q.cache()
-    _register_persisted([q])
+    # walk→pair→PPMI chain ran 4× per call, r15).  The returned plan
+    # reads it lazily, so it cannot unpersist here.
+    q = cached(q)
     # eager int64-envelope probe (r13 advice 3; exact since r15): the
     # largest integer this plan forms is a squared norm Σqv² per id,
     # which also bounds every pair dot (Cauchy-Schwarz) — check the

@@ -1732,105 +1732,74 @@ def test_semantic_dedup_planted_groups(spark):
     assert dropped == expect_drop
 
 
+def _persistent_ids(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
 def test_fuzzy_dedup_releases_shingle_cache(spark, tables):
     """r6 review: the persisted shingle frame must not outlive the
     composed flagship (a per-ingest-batch service would otherwise
-    accumulate MEMORY_AND_DISK blocks forever).  Assert on the cached
-    frames' own storage levels, not the context-wide persistent-RDD
-    census — Spark's ContextCleaner unpersists GC'd frames
-    asynchronously, so census equality is racy in a long session."""
-    from pyspark import StorageLevel
+    accumulate MEMORY_AND_DISK blocks forever).  A direct
+    minhash_lsh_pairs call leaves its cache live for reuse until the
+    ledger drains; fuzzy_dedup frees its own.  Asserts on id sets, not
+    census counts — ContextCleaner unpersists GC'd frames
+    asynchronously, so counts are racy in a long session."""
+    from kafka_merge_purge_spark.operators.iterate import release_all_persisted
 
-    pairs = dd.minhash_lsh_pairs(tables["documents"])
-    pairs.collect()
-    (sh,) = pairs._kmp_persisted
-    assert sh.storageLevel != StorageLevel.NONE  # cache live, reusable
-    dd.release_persisted(pairs)
-    assert sh.storageLevel == StorageLevel.NONE
+    release_all_persisted()  # an earlier test's cache of this plan would be reused
+    before = _persistent_ids(spark)
+    dd.minhash_lsh_pairs(tables["documents"]).collect()
+    made = _persistent_ids(spark) - before
+    assert made  # cache live, reusable
+    release_all_persisted()
+    assert not (_persistent_ids(spark) & made)
 
-    # the composed flagship releases its own cache: its pair source's
-    # recorded frames end the call unpersisted
-    out = dd.fuzzy_dedup(tables["documents"])
-    out.collect()
-    # fuzzy_dedup released internally before returning; nothing of its
-    # pipeline remains persisted with a kmp marker on the result
-    assert getattr(out, "_kmp_persisted", []) == []
+    # the composed flagship releases its own cache before returning
+    before = _persistent_ids(spark)
+    dd.fuzzy_dedup(tables["documents"]).collect()
+    assert not (_persistent_ids(spark) - before)
 
 
 def test_release_all_persisted_registry_drains(spark, tables):
     """ADVICE r6: direct pair-generator callers (bench entries,
-    notebooks) never call release_persisted, and any transformation on
-    the result silently drops the _kmp_persisted attribute — the
-    module registry must still know about the caches and
-    release_all_persisted() must drain them all."""
-    from pyspark import StorageLevel
+    notebooks) may transform or discard the result — the ledger must
+    still know about the caches and release_all_persisted() must drain
+    them all, exactly once."""
+    from kafka_merge_purge_spark.operators.iterate import release_all_persisted
 
-    dd.release_all_persisted()  # drain whatever earlier tests left behind
+    release_all_persisted()  # drain whatever earlier tests left behind
+    before = _persistent_ids(spark)
     pairs = dd.minhash_lsh_pairs(tables["documents"])
-    # a transformation LOSES the attribute — the old leak scenario
-    transformed = pairs.select("id_a", "id_b")
-    transformed.collect()
-    assert getattr(transformed, "_kmp_persisted", None) is None
-    (sh,) = pairs._kmp_persisted
-    assert sh.storageLevel != StorageLevel.NONE
-    assert dd.release_all_persisted() == 1
-    assert sh.storageLevel == StorageLevel.NONE
-    # released frames leave the registry: per-frame release then drain
-    # does not double-release
-    pairs2 = dd.minhash_lsh_pairs(tables["documents"])
-    pairs2.collect()
-    dd.release_persisted(pairs2)
-    assert dd.release_all_persisted() == 0
+    # a transformation of the result — the old leak scenario
+    pairs.select("id_a", "id_b").collect()
+    made = _persistent_ids(spark) - before
+    assert made
+    assert release_all_persisted() == 1
+    assert not (_persistent_ids(spark) & made)
+    # released frames leave the ledger: a second drain releases nothing
+    assert release_all_persisted() == 0
 
 
-def test_persisted_registry_strong_refs_and_cap(spark, tables):
-    """ADVICE r8: the registry holds STRONG references — CacheManager
+def test_persisted_registry_strong_refs(spark, tables):
+    """ADVICE r8: the ledger holds STRONG cache handles — CacheManager
     keeps the cached plan alive regardless of Python handles, so only a
-    strong registry handle guarantees release_all_persisted() can still
+    strong ledger handle guarantees release_all_persisted() can still
     unpersist after the caller discarded the result (the r7 weakref
-    form silently leaked exactly that case) — and caps registered
-    frames: 2N generator calls leave at most N persisted frames, oldest
-    unpersisted first."""
-    import warnings as _w
-
-    from pyspark import StorageLevel
-
-    dd.release_all_persisted()
-    # strong-ref behavior: drop every caller handle → the registry MUST
-    # still drain the cache (the CacheManager pin survives Python GC)
-    pairs = dd.minhash_lsh_pairs(tables["documents"])
-    pairs.collect()
-    del pairs
+    form silently leaked exactly that case)."""
     import gc
 
-    gc.collect()
-    assert dd.release_all_persisted() == 1
+    from kafka_merge_purge_spark.operators.iterate import release_all_persisted
 
-    # cap behavior: hold all results so refs stay live; exceed the cap
-    old_cap = dd.PERSISTED_REGISTRY_CAP
-    try:
-        dd.PERSISTED_REGISTRY_CAP = 3
-        dd._cap_warned = False  # warn-once is module state; earlier tests
-        # in the session may already have tripped the cap legitimately
-        held = []
-        with _w.catch_warnings(record=True) as rec:
-            _w.simplefilter("always")
-            for _ in range(6):
-                p = dd.minhash_lsh_pairs(tables["documents"])
-                p.collect()
-                held.append(p)
-        live = [
-            f for p in held for f in p._kmp_persisted
-            if f.storageLevel != StorageLevel.NONE
-        ]
-        assert len(live) <= 3  # ≤ cap despite 6 registrations
-        # the survivors are the NEWEST (drop-oldest)
-        oldest = held[0]._kmp_persisted[0]
-        assert oldest.storageLevel == StorageLevel.NONE
-        assert any("release_all_persisted" in str(w.message) for w in rec)
-    finally:
-        dd.PERSISTED_REGISTRY_CAP = old_cap
-        dd.release_all_persisted()
+    release_all_persisted()
+    before = _persistent_ids(spark)
+    # drop every caller handle → the ledger MUST still drain the cache
+    pairs = dd.minhash_lsh_pairs(tables["documents"])
+    pairs.collect()
+    made = _persistent_ids(spark) - before
+    del pairs
+    gc.collect()
+    assert release_all_persisted() == 1
+    assert not (_persistent_ids(spark) & made)
 
 
 def test_embedding_fuzzy_dedup_rejects_exact_kwargs_on_bucketed_path(spark):
@@ -2490,8 +2459,7 @@ def test_multimodal_dedup_matches_reference_union_find(spark):
     tp = {
         (r["id_a"], r["id_b"])
         for r in dd.minhash_lsh_pairs(
-            entry._t(spark, sf, "documents"), jaccard_threshold=0.5,
-            persist_shingles=False,
+            entry._t(spark, sf, "documents"), jaccard_threshold=0.5
         ).collect()
     }
     from kafka_merge_purge_spark.operators import multimodal as mm
@@ -2551,9 +2519,7 @@ def test_multimodal_dedup_transitive_merge_planted(spark):
         ],
         "media_id long, payload binary",
     )
-    tp = dd.minhash_lsh_pairs(
-        texts, jaccard_threshold=0.5, persist_shingles=False
-    ).select("id_a", "id_b")
+    tp = dd.minhash_lsh_pairs(texts, jaccard_threshold=0.5).select("id_a", "id_b")
     ip = mm.image_neardup_pairs_wide(images, max_hamming=6).select("id_a", "id_b")
     tset = {(r["id_a"], r["id_b"]) for r in tp.collect()}
     iset = {(r["id_a"], r["id_b"]) for r in ip.collect()}
@@ -2949,10 +2915,8 @@ def test_set_similarity_pairs_generic_sets(spark):
     mega-bucketed; (4) long ids pass through."""
     import itertools
 
-    from kafka_merge_purge_spark.operators.dedup import (
-        release_all_persisted,
-        set_similarity_pairs,
-    )
+    from kafka_merge_purge_spark.operators.dedup import set_similarity_pairs
+    from kafka_merge_purge_spark.operators.iterate import release_all_persisted
 
     sets = {
         1: ["a", "b", "c", "d"],
@@ -3673,9 +3637,7 @@ def test_sssp_matches_reference_and_stable_twin(spark):
 
 def test_iterate_primitive_contract(spark):
     """iterate(): fixed rounds without a changed col; early stop with
-    one; checkpoint_every probes only materialized rounds (monotone
-    steps may overshoot the fixpoint but land on the same state);
-    max_rounds=0 returns the initial state; bad args raise."""
+    one; max_rounds=0 returns the initial state; bad args raise."""
     import pytest as _pytest
     from pyspark.sql import functions as F
 
@@ -3700,16 +3662,62 @@ def test_iterate_primitive_contract(spark):
     # 3 moving rounds + the round that detects no movement
     assert len(calls) == 4
 
-    # checkpoint_every=2: probes on rounds 2,4,... — may run one extra
-    # cheap round past the fixpoint but returns the identical state
-    out2 = iterate(init, sat, 50, checkpoint_every=2)
-    assert out2.collect()[0]["x"] == 3
-
     assert iterate(init, sat, 0).collect()[0]["x"] == 0
     with _pytest.raises(ValueError):
         iterate(init, sat, -1)
-    with _pytest.raises(ValueError):
-        iterate(init, sat, 5, checkpoint_every=0)
+
+
+def test_ledger_releases_every_operator_rdd(spark):
+    """The materialization ledger: after release_all_persisted(), no RDD
+    that strongly_connected_components or connected_components (both on
+    their distributed iterate paths) made persistent is still
+    persistent.  Compares id sets, not counts — ContextCleaner frees
+    GC'd checkpoints asynchronously, so a count can move either way.
+    And one iterate() call leaves exactly one of its own checkpoints:
+    the state it returns; the caller's initial state stays readable."""
+    from pyspark.sql import functions as F
+
+    from kafka_merge_purge_spark.operators.components import (
+        connected_components,
+        strongly_connected_components,
+    )
+    from kafka_merge_purge_spark.operators.iterate import (
+        iterate,
+        materialize,
+        release_all_persisted,
+    )
+
+    jsc = spark.sparkContext._jsc
+
+    def persistent() -> set[int]:
+        return set(jsc.getPersistentRDDs().keySet())
+
+    # two directed cycles joined by a bridge, plus a tail
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5), (5, 6), (6, 4), (6, 7)],
+        "src long, dst long",
+    )
+    before = persistent()
+    scc = strongly_connected_components(edges, max_driver_edges=0)
+    cc = connected_components(edges, "src", "dst", max_driver_edges=0)
+    assert {r["node"]: r["scc"] for r in scc.collect()} == {
+        1: 1, 2: 1, 3: 1, 4: 4, 5: 4, 6: 4, 7: 7,
+    }
+    assert {r["component"] for r in cc.collect()} == {1}
+    made = persistent() - before
+    assert made  # the distributed paths did materialize
+    release_all_persisted()
+    assert not (persistent() & made)
+
+    init = materialize(spark.range(4).select(F.col("id").alias("x")))
+    before = persistent()
+    out = iterate(init, lambda s, i: s.select((F.col("x") + 1).alias("x")), 6)
+    assert sorted(r["x"] for r in out.collect()) == [6, 7, 8, 9]
+    left = persistent() - before
+    assert left == {out._jdf.logicalPlan().rdd().id()}
+    assert sorted(r["x"] for r in init.collect()) == [0, 1, 2, 3]
+    release_all_persisted()
+    assert not (persistent() & (left | {init._jdf.logicalPlan().rdd().id()}))
 
 
 def test_winsorize_bounds_and_facts_never_shuffle(spark):

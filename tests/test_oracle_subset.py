@@ -39,7 +39,7 @@ def duck():
 @pytest.mark.parametrize("name", QUERIES)
 def test_query_matches_duckdb_oracle(spark, duck, name):
     import __spark_entry__ as entry
-    from kafka_merge_purge_spark.operators.dedup import release_all_persisted
+    from kafka_merge_purge_spark.operators.iterate import release_all_persisted
 
     sdf = entry.queries()[name](spark, SF_DIR)
     try:

@@ -452,3 +452,28 @@ def test_bootstrap_hashes_once_per_row_below_the_explode(spark):
         f"md5 projection (nodes {md5_blocks}) sits above a Generate "
         f"(nodes {gen_ids}) — hashing per generated row:\n" + plan[:2000]
     )
+
+
+def test_materializations_go_through_the_ledger():
+    """Every operator checkpoint goes through operators/iterate.py's
+    materialization ledger, so release_all_persisted() can free it: a
+    bare ``.localCheckpoint(`` anywhere else in the package, or the
+    retired per-operator registry's names, fail this scan."""
+    from pathlib import Path
+
+    import kafka_merge_purge_spark
+
+    pkg = Path(kafka_merge_purge_spark.__file__).parent
+    ledger = pkg / "operators" / "iterate.py"
+    # spelled in pieces so a grep of the tree for the retired names
+    # finds none left, this scan included
+    retired = tuple(a + b for a, b in (
+        ("_register", "_persisted"), ("_kmp", "_persisted"), ("_PERSISTED", "_REGISTRY"),
+    ))
+    bad = []
+    for f in sorted(pkg.rglob("*.py")):
+        src = f.read_text()
+        if f != ledger and ".localCheckpoint(" in src:
+            bad.append(f"{f.relative_to(pkg)}: bare .localCheckpoint(")
+        bad += [f"{f.relative_to(pkg)}: {name}" for name in retired if name in src]
+    assert not bad, bad

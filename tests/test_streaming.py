@@ -999,7 +999,7 @@ def test_streaming_minhash_fold_matches_batch_candidates(spark):
         (r["id_a"], r["id_b"])
         for r in dd.minhash_lsh_pairs(
             docs, num_hashes=NH, bands=NB, k=K,
-            jaccard_threshold=0.0, persist_shingles=False,
+            jaccard_threshold=0.0,
         ).collect()
     }
     assert batch  # corpus must exercise the band join

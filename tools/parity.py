@@ -87,7 +87,7 @@ def main() -> int:
         finally:
             # ADVICE r6: drain operator-persisted caches per query so a
             # 123-query sweep doesn't accumulate MEMORY_AND_DISK blocks
-            from kafka_merge_purge_spark.operators.dedup import release_all_persisted
+            from kafka_merge_purge_spark.operators.iterate import release_all_persisted
 
             release_all_persisted()
         if name not in oracles:
